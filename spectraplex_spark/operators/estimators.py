@@ -89,9 +89,8 @@ def minhash_error_report(
     # ~35 times re-runs it ~35 times (measured 100s at sf0.01 — the
     # repetition-report trap, textops.py r7 ledger). Materializing each
     # expensive array as a real column makes every later reference an
-    # attribute read. The operator itself stays zero-shuffle; callers
-    # on single-split local inputs spread rows first (the catalog
-    # builder does — at 100 TB the input splits provide parallelism).
+    # attribute read. The operator itself stays zero-shuffle; its
+    # parallelism is the input's split count.
     sampled = df.filter((F.col(id_col) % sample_mod) == 0).filter(
         F.size(tokens(F.col(text_col))) >= 1
     )

@@ -768,11 +768,7 @@ _NGRAM_TOKENS = "list_filter(string_split(trim(regexp_replace(lower(text), '[ \\
     "recall-guaranteed certification.",
 )
 def minhash_neardup_pairs(spark, sf_dir):
-    # spread=True: the shingle+signature pass is THE heavy narrow stage
-    # (32 affine hashes over the shingle array per row) — the bounded
-    # round-robin spread parallelizes it; a production multi-split
-    # layout makes the spread a no-op (registry._spread_unsplittable_scan).
-    return D.minhash_neardup_pairs(table(spark, sf_dir, "documents", spread=True))
+    return D.minhash_neardup_pairs(table(spark, sf_dir, "documents"))
 
 
 @query(
@@ -1296,10 +1292,7 @@ def _corpus_prep_pipeline_oracle() -> str:
 def corpus_prep_pipeline(spark, sf_dir):
     from spectraplex_spark.operators.corpus import prepare_corpus
 
-    # spread=True: the gate+enrichment scan (tokenize, fingerprint,
-    # shingle hashes — all heavy per-row text work) roots here; bounded
-    # spread per registry._spread_unsplittable_scan (r15 A/B).
-    docs = table(spark, sf_dir, "documents", spread=True)
+    docs = table(spark, sf_dir, "documents")
     clean, _ = prepare_corpus(docs, keep_langs=("en",), collect_stats=False)
     return clean.select("doc_id", "lang", "n_chars")
 
@@ -3912,12 +3905,7 @@ _REP_BASE_SQL = (
 def gopher_repetition_report(spark, sf_dir):
     from spectraplex_spark.operators.repetition import repetition_report
 
-    # The operator is a narrow per-row map with heavy per-row n-gram
-    # work: spread=True gives it bounded scan parallelism adaptively
-    # (registry._spread_unsplittable_scan), with no hard-coded
-    # repartition (r14: a literal 32 defeated the driver's lower-core
-    # scaling sweeps; r15: table-level spread unwound to opt-in).
-    docs = table(spark, sf_dir, "documents", spread=True)
+    docs = table(spark, sf_dir, "documents")
     return (
         repetition_report(docs, top_ns=(2, 3), dup_ns=(5, 6))
         .select(
@@ -3962,7 +3950,7 @@ def gopher_repetition_report(spark, sf_dir):
 def gopher_repetition_gate(spark, sf_dir):
     from spectraplex_spark.operators.repetition import repetition_gate
 
-    docs = table(spark, sf_dir, "documents", spread=True)  # see report
+    docs = table(spark, sf_dir, "documents")
     gated = repetition_gate(docs)
     return (
         gated.groupBy("source")
@@ -4245,8 +4233,6 @@ def domain_cap_scalable(spark, sf_dir):
     url = F.when(F.col("doc_id") % 97 == 5, F.lit("schemeless.example/p")).otherwise(
         site
     )
-    # the table-level layout-guarded spread already parallelizes the
-    # single-split local parquet (registry._spread_unsplittable_scan)
     urls = docs.select("doc_id", url.alias("url"))
     return (
         cap_per_domain_scalable(urls, cap=5, hot_factor=4)
@@ -4596,10 +4582,7 @@ def _minhash_error_oracle_sql(num_hashes: int = 16, sample_mod: int = 5) -> str:
 def minhash_estimate_error(spark, sf_dir):
     from spectraplex_spark.operators.estimators import minhash_error_report
 
-    # single-split local parquet: the opt-in layout-guarded spread
-    # parallelizes the compute-heavy narrow pass (a 100 TB input
-    # brings its own splits and the guard skips the exchange)
-    docs = table(spark, sf_dir, "documents", spread=True)
+    docs = table(spark, sf_dir, "documents")
     return minhash_error_report(docs).orderBy("doc_id")
 
 
@@ -4630,7 +4613,7 @@ def minhash_estimate_error(spark, sf_dir):
 def entropy_quality_report(spark, sf_dir):
     from spectraplex_spark.operators.textops import char_entropy_report
 
-    docs = table(spark, sf_dir, "documents", spread=True)  # see above
+    docs = table(spark, sf_dir, "documents")
     return char_entropy_report(docs).orderBy("doc_id")
 
 
@@ -5081,9 +5064,7 @@ def web_curation_pipeline(spark, sf_dir):
         registered_domain,
     )
 
-    # spread=True: gates (repetition n-grams, URL canonicalization,
-    # NFC keys) are heavy per-row text work rooted at this scan.
-    docs = table(spark, sf_dir, "documents", spread=True)
+    docs = table(spark, sf_dir, "documents")
     sub = (
         F.when(F.col("doc_id") % 3 == 0, F.lit("a."))
         .when(F.col("doc_id") % 3 == 1, F.lit("b."))
@@ -6964,9 +6945,7 @@ def curation_run_e2e(spark, sf_dir):
     from spectraplex_spark.operators.packing import pack_documents
     from spectraplex_spark.operators.shuffling import shuffle_shards_scalable
 
-    # spread=True: the prepare_corpus gates + decontam n-gram pass root
-    # their heavy text work at this one scan.
-    docs = table(spark, sf_dir, "documents", spread=True)
+    docs = table(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 7 == 0).select(
         F.col("doc_id").alias("eval_doc_id"), "text"
     )

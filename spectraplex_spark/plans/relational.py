@@ -60,13 +60,7 @@ def dsum(col):
     "aggregation keeps the shuffle tiny (6 groups) at any scale.",
 )
 def q1_pricing_summary(spark, sf_dir):
-    # spread=True: the shipped lineitem parquet is ONE row group, so the
-    # scan+filter+partial-decimal-aggregate stage otherwise runs as a
-    # single task (measured 1.01 s → 0.69 s at sf0.1 on local[32]).
-    # The spread is layout-guarded (registry._spread_unsplittable_scan):
-    # at any production layout it is a structural no-op, preserving the
-    # map-side-partial-agg-keeps-the-shuffle-tiny scale story below.
-    li = table(spark, sf_dir, "lineitem", spread=True)
+    li = table(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))

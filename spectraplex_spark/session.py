@@ -18,6 +18,14 @@ from pyspark.sql import SparkSession
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def default_driver_memory() -> str:
+    """A quarter of physical memory, between 1 and 4 GiB: local mode runs
+    driver and executors in this one JVM, so a fixed large heap gets it
+    OOM-killed on a small machine. ``SPARK_DRIVER_MEM`` overrides it."""
+    total_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
+    return f"{max(1, min(4, int(total_gib // 4)))}g"
+
+
 def get_spark(
     app_name: str = "spectraplex_spark",
     shuffle_partitions: int | None = None,
@@ -47,7 +55,10 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM", default_driver_memory()),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
     )

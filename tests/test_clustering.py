@@ -30,13 +30,13 @@ VEC_SCHEMA = T.StructType(
 )
 
 
-def _blob(center, n, dim, spread=0.01, start_id=0, step=1):
+def _blob(center, n, dim, radius=0.01, start_id=0, step=1):
     # deterministic pseudo-jitter: no RNG, reproducible in the replay
     return [
         (
             start_id + step * i,
             [
-                float(center[d] + spread * math.sin(1.0 + 7 * i + 13 * d))
+                float(center[d] + radius * math.sin(1.0 + 7 * i + 13 * d))
                 for d in range(dim)
             ],
         )

@@ -7,6 +7,7 @@ broadcasting, or normalize grow a shuffle, these fail.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from spectraplex_spark.plans import ALL_QUERIES as CATALOG
@@ -138,17 +139,27 @@ def test_bq_scan_is_expression_only_shuffle_free(spark):
 
 
 def test_chunking_is_zero_shuffle_narrow_map(spark):
-    """Chunking must stay a narrow map stage: no KEYED exchange — it
-    never shuffles by any key; the packer owns the data shuffle. The
-    documents read carries the layout-guarded round-robin spread
-    (registry._spread_unsplittable_scan, r14: the shipped single-row-
-    group parquet can never scan-parallelize on its own), which is a
-    REPARTITION_BY_NUM placement exchange, not a data shuffle — at a
-    production multi-split layout the guard removes it entirely."""
+    """Chunking must stay a narrow map stage: no exchange of any kind —
+    it never shuffles by any key (the packer owns the data shuffle), and
+    the documents scan feeds it directly."""
     plan = _initial_plan(CATALOG["doc_chunks_report"].builder(spark, SF_DIR))
-    assert "Exchange hashpartitioning" not in plan
-    assert "Exchange rangepartitioning" not in plan
-    assert plan.count("Exchange") <= 1  # the spread only, nothing else
+    assert "Exchange" not in plan, plan[:1500]
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "q1_pricing_summary",
+        "minhash_neardup_pairs",
+        "gopher_repetition_report",
+        "entropy_quality_report",
+    ],
+)
+def test_catalog_scans_add_no_roundrobin_exchange(spark, name):
+    """A catalog table read is a plain parquet scan: its parallelism is
+    the input's split count, never a round-robin placement exchange."""
+    plan = _initial_plan(CATALOG[name].builder(spark, SF_DIR))
+    assert "RoundRobinPartitioning" not in plan, plan[:1500]
 
 
 def test_span_mining_has_no_corpus_broadcast_or_selfjoin_blowup(spark):
