@@ -101,24 +101,14 @@ def cmd_normalize(args) -> int:
 
 
 def cmd_read(args) -> int:
-    from pyspark.errors import AnalysisException
-
     from spectraplex_spark import serving
 
     spark = _spark()
-    try:
-        if args.silver:
-            df = serving.ledger_by_wallet(spark, args.silver, args.wallet)
-        else:
-            df = serving.transactions_by_wallet(spark, args.bronze, args.wallet)
-        rows = serving.to_json_rows(df, limit=args.limit)
-    except AnalysisException as e:
-        if "UNABLE_TO_INFER_SCHEMA" not in str(e):
-            raise
-        # A freshly init-tables'd (zero-row, footer-less) table serves
-        # zero rows, not a schema-inference stack trace.
-        rows = []
-    for line in rows:
+    if args.silver:
+        df = serving.ledger_by_wallet(spark, args.silver, args.wallet)
+    else:
+        df = serving.transactions_by_wallet(spark, args.bronze, args.wallet)
+    for line in serving.to_json_rows(df, limit=args.limit):
         print(line)
     return 0
 

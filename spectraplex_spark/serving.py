@@ -10,12 +10,18 @@ Reference mapping (api/src/main.rs:36-37,115-131):
     bought)
   - JSON array responses (K4, api/src/main.rs:121,130) → ``to_json_rows``
 
-Scale notes: both reads are partition-pruned point lookups — bronze is
-partitioned by (chain, ingest_date) and silver by entry_date with the
-wallet carried denormalized, so the wallet predicate prunes row groups
-via min/max stats and any date bound prunes partitions. The reference
+Scale notes: every Parquet read opens the table's committed epoch
+snapshot (``sources.io.open_source``), reused while no epoch commits,
+so a repeated read neither re-lists the table nor re-infers its schema,
+and files of a torn append are never served. The wallet predicate is
+pushed to the Parquet reader, but it prunes almost nothing today: the
+sinks cluster no wallet's rows, and a landed file is one row group
+holding many wallets, so a read scans the whole table. Bronze is
+partitioned by (chain, ingest_date) and silver by entry_date, so only a
+date bound prunes partitions. The bounded, sorted result collects as
+one TakeOrderedAndProject stage (``to_json_rows``). The reference
 needed four covering indexes for these paths (init.sql:17-19,34-35);
-here layout + statistics do that job.
+here a wallet-clustered layout would have to do that job.
 """
 
 from __future__ import annotations
@@ -39,8 +45,8 @@ def transactions_by_wallet(
 
     ``bronze_source`` is a Parquet path or a ``jdbc:`` URL (the
     reference's actual Postgres deployment, repo.rs:73-107) — the wallet
-    and time predicates push down either way (row-group pruning vs SQL
-    WHERE)."""
+    and time predicates push down either way (Parquet reader filters vs
+    SQL WHERE)."""
     df = open_source(spark, bronze_source, table, **jdbc_options).filter(
         F.col("wallet_address") == wallet
     )
@@ -109,4 +115,14 @@ def to_json_rows(df: DataFrame, limit: int = 1000) -> list[str]:
     edge. The limit is mandatory by design — an unbounded collect at the
     HTTP edge is the reference's inline-ingest anti-pattern (SURVEY
     §4.2) in read form."""
-    return [r for r in df.limit(limit).toJSON().collect()]
+    return [r[0] for r in _json_frame(df, limit).collect()]
+
+
+def _json_frame(df: DataFrame, limit: int) -> DataFrame:
+    """``to_json_rows``' frame: the first ``limit`` rows as one JSON
+    string column. Serialized by ``to_json`` (the JSON options
+    ``DataFrame.toJSON`` uses, so the text is the same) rather than
+    ``toJSON``, whose Python RDD plans a sorted limit as a range sort (a
+    sampling job and an exchange); here it plans as one
+    TakeOrderedAndProject stage."""
+    return df.limit(limit).select(F.to_json(F.struct("*")))

@@ -9,9 +9,10 @@ Reference mapping:
     NOTHING`, repo.rs:13-71): re-expressed as a left-anti join of the
     incoming batch against the target's ids, then append (SURVEY §4.1).
   - Index-driven access paths (init.sql:17-19,34-35): re-expressed as
-    partition columns — bronze by (chain, ingest date), silver by
-    wallet bucket/date — so the serving predicates partition-prune
-    instead of index-seek.
+    partition columns — bronze by (chain, ingest date), silver by entry
+    date — so date bounds partition-prune instead of index-seek. The
+    wallet predicate is pushed to the parquet reader but clusters
+    nothing: a wallet's rows are spread over every file.
 
 Scale notes: the anti-join reads ONLY the id column of the target
 (Parquet column pruning), so its cost is O(ids), not O(data). At 100 TB
@@ -24,10 +25,13 @@ append + anti-join is the portable expression.
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import os
 
-from spectraplex_spark.schemas import BRONZE_SCHEMA
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+
+from spectraplex_spark.schemas import BRONZE_SCHEMA, SILVER_SCHEMA
+from spectraplex_spark.sources.commit import _epoch_paths, read_committed_epochs
 
 
 def open_source(
@@ -46,6 +50,15 @@ def open_source(
     funneling through one connection. Tested against embedded Derby
     (the JDBC engine Spark ships); the same code path serves Postgres
     by URL swap.
+
+    A Parquet path is read as its committed epoch snapshot
+    (``commit.read_committed_epochs``): files of a torn append, on disk
+    but committed by no epoch, are never served. The opened frame is
+    reused while the session and the table's epoch manifest names are
+    unchanged, so a repeated read skips the table listing, the footer
+    reads and schema inference. A ``transactions`` or ``ledger_entries``
+    directory with no epoch yet (a fresh init-tables) reads as zero
+    rows of the sink's schema.
     """
     if source.startswith("jdbc:"):
         if not table:
@@ -54,7 +67,36 @@ def open_source(
         for k, v in jdbc_options.items():
             reader = reader.option(k, str(v))
         return reader.load()
-    return spark.read.parquet(source)
+    # Listed BEFORE the read: an epoch committing in between lands in the
+    # frame under the older names and costs one more miss, never a stale hit.
+    names = tuple(os.path.basename(p) for p in _epoch_paths(source))
+    hit = _snapshots.get(source)
+    if hit is not None and hit[0] is spark and hit[1] == names:
+        return hit[2]
+    if not names and table in _EMPTY_READ_SCHEMAS and os.path.isdir(source):
+        df = spark.createDataFrame([], _EMPTY_READ_SCHEMAS[table])
+    else:
+        df = read_committed_epochs(spark, source)
+    _snapshots[source] = (spark, names, df)
+    return df
+
+
+# open_source's committed snapshots, one per table path: (session, epoch
+# manifest names, frame). Epochs are append-only and a squash renames
+# them, so equal names mean the same committed files; a frame is never
+# reused by another session (a restarted one included).
+_snapshots: dict[str, tuple[SparkSession, tuple[str, ...], DataFrame]] = {}
+
+# A reference table before its first epoch has no footer to read its
+# schema from: the sink's declared columns plus its date partition.
+_EMPTY_READ_SCHEMAS = {
+    "transactions": T.StructType(
+        [*BRONZE_SCHEMA.fields, T.StructField("ingest_date", T.DateType())]
+    ),
+    "ledger_entries": T.StructType(
+        [*SILVER_SCHEMA.fields, T.StructField("entry_date", T.DateType())]
+    ),
+}
 
 
 def write_jdbc(
@@ -146,25 +188,34 @@ def read_orc(spark: SparkSession, path: str, schema=None) -> DataFrame:
     return reader.orc(path)
 
 
-def _target_exists(spark: SparkSession, path: str) -> bool:
-    """True iff ``path`` holds a readable Parquet dataset.
+def _read_target(spark: SparkSession, path: str) -> DataFrame | None:
+    """The Parquet dataset at ``path``, or None if there is none.
 
-    Probed by attempting a schema-only read rather than via the private
-    ``spark._jvm`` Hadoop gateway: the read works identically under Spark
-    Connect (no JVM access from the client) and for any filesystem scheme
-    the session supports. Schema resolution touches only footers — no
-    data scan. A missing/empty path raises AnalysisException → False;
-    genuinely corrupt targets still raise on the subsequent real read.
+    One read both probes and opens the target, so listing and schema
+    inference run once. Probed by attempting the read rather than via
+    the private ``spark._jvm`` Hadoop gateway: the read works
+    identically under Spark Connect (no JVM access from the client; the
+    schema access is what resolves a lazy Connect frame) and for any
+    filesystem scheme the session supports. Schema resolution touches
+    only footers — no data scan. A missing/empty path raises
+    AnalysisException → None; genuinely corrupt targets still raise on
+    the subsequent real read.
     """
     try:
-        spark.read.parquet(path).schema
-        return True
+        df = spark.read.parquet(path)
+        df.schema
     except AnalysisException:
-        return False
+        return None
     # Any OTHER exception (network blip, credentials, permissions)
     # propagates: treating a transient probe failure as "table absent"
     # would skip the schema guard AND the anti-join and land a replayed
     # batch as full duplicates with no error anywhere (review finding).
+    return df
+
+
+def _target_exists(spark: SparkSession, path: str) -> bool:
+    """True iff ``path`` holds a readable Parquet dataset."""
+    return _read_target(spark, path) is not None
 
 
 def _existing_partition_layout(path: str) -> tuple[str, ...]:
@@ -225,8 +276,8 @@ def idempotent_append(
     """
     spark = df.sparkSession
     batch = df.dropDuplicates([id_col])
-    if _target_exists(spark, path):
-        existing = spark.read.parquet(path)
+    existing = _read_target(spark, path)
+    if existing is not None:
         # SCHEMA GUARD: parquet append has no engine-side contract — a
         # batch with a renamed/retyped column would land and silently fork
         # the table's schema (readers then null-fill or fail file-by-file).

@@ -100,6 +100,27 @@ def test_serving_read_pushes_wallet_predicate(spark, tmp_path):
     assert "PushedFilters" in plan and "wallet_address" in plan.split("PushedFilters")[1][:200]
 
 
+def test_serving_json_read_is_one_topk_stage(spark, tmp_path):
+    """A GET's bounded, sorted read runs as one TakeOrderedAndProject
+    stage: no range sort (a sampling job plus an exchange) and no
+    single-partition exchange."""
+    from spectraplex_spark import serving
+    from spectraplex_spark.schemas import BRONZE_SCHEMA
+    from spectraplex_spark.sources.io import write_bronze
+
+    rows = [
+        (f"i{k}", "u", f"w{k % 3}", 1672531200 + k, f"s{k}", "solana", "{}", None)
+        for k in range(9)
+    ]
+    path = str(tmp_path / "bronze")
+    write_bronze(spark.createDataFrame(rows, BRONZE_SCHEMA), path)
+    read = serving.transactions_by_wallet(spark, path, "w1")
+    plan = _executed_plan(serving._json_frame(read, 1000))
+    assert "TakeOrderedAndProject" in plan
+    assert "Exchange rangepartitioning" not in plan
+    assert "Exchange SinglePartition" not in plan
+
+
 def test_pq_adc_scan_is_shuffle_free_topk(spark):
     """PQ's whole query-time claim: the ADC scan is a narrow map stage
     (literal LUT lookups) feeding TakeOrderedAndProject — no exchange of

@@ -52,6 +52,7 @@ def test_serving_reads(spark, tmp_path):
 
     rows = serving.to_json_rows(led, limit=2)
     assert len(rows) == 2 and json.loads(rows[0])["wallet_address"] == WALLET
+    assert rows == led.limit(2).toJSON().collect()  # same JSON text as toJSON
 
 
 def test_ingest_conformance(spark):

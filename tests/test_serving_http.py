@@ -5,7 +5,10 @@ route/error parity with api/src/main.rs:30-50.
 
 from __future__ import annotations
 
+import glob
 import json
+import os
+import shutil
 import threading
 import urllib.error
 import urllib.request
@@ -14,6 +17,7 @@ import pytest
 
 from rpc_fixture import WALLET, serve_node
 from spectraplex_spark.serving_http import AppState, make_server
+from tests.test_normalize_golden import WALLET as GOLDEN, bronze_row, solana_tx
 
 
 @pytest.fixture()
@@ -150,3 +154,79 @@ def test_missing_fields_still_400_with_field_name(app):
             _post(f"{app}/v1/ingest", payload)
         assert e.value.code == 400
         assert missing in e.value.read().decode()
+
+
+# --- committed-snapshot reads ---------------------------------------------
+
+
+def _land(spark, tmp_path, batch: int, n: int = 3) -> None:
+    """Land ``n`` fresh transactions of the golden wallet into bronze and
+    silver under ``tmp_path``, the path the ``app`` fixture serves."""
+    from pyspark.sql import functions as F
+
+    from spectraplex_spark.operators.normalize import normalize
+    from spectraplex_spark.schemas import BRONZE_SCHEMA
+    from spectraplex_spark.sources.io import write_bronze, write_silver
+
+    rows = [
+        bronze_row(
+            solana_tx(pre_balances=[(10 + i) * 10**9, 0], post_balances=[9 * 10**9, 10**9]),
+            tx_hash=f"b{batch}-{i}",
+        )
+        for i in range(n)
+    ]
+    bronze = spark.createDataFrame(rows, BRONZE_SCHEMA)
+    write_bronze(bronze, str(tmp_path / "bronze"))
+    audit = F.lit("2026-01-02 03:04:05").cast("timestamp")
+    write_silver(normalize(bronze, audit_ts=audit), str(tmp_path / "silver"))
+
+
+def _get_ids(url) -> list[str]:
+    status, body = _get(url)
+    assert status == 200
+    return [r["id"] for r in json.loads(body)]
+
+
+def test_torn_append_is_never_served(spark, tmp_path, app):
+    """A data file on disk that no epoch commits (a writer killed between
+    Spark's job commit and the epoch commit) is invisible to every read:
+    the serving functions and a live GET return each committed row once."""
+    from spectraplex_spark import serving
+
+    _land(spark, tmp_path, 0)
+    _land(spark, tmp_path, 1)
+    for table in ("bronze", "silver"):
+        first = sorted(glob.glob(str(tmp_path / table / "**" / "part-*"), recursive=True))[0]
+        shutil.copy(first, os.path.join(os.path.dirname(first), "part-99999-torn.snappy.parquet"))
+
+    for df in (
+        serving.ledger_by_wallet(spark, str(tmp_path / "silver"), GOLDEN),
+        serving.transactions_by_wallet(spark, str(tmp_path / "bronze"), GOLDEN),
+    ):
+        ids = [json.loads(r)["id"] for r in serving.to_json_rows(df)]
+        assert len(ids) == 6 and len(set(ids)) == 6
+    for route in ("ledger", "transactions"):
+        ids = _get_ids(f"{app}/v1/{route}/{GOLDEN}")
+        assert len(ids) == 6 and len(set(ids)) == 6, route
+
+
+def test_get_sees_a_batch_landed_between_reads(spark, tmp_path, app):
+    """A snapshot reused across GETs is dropped once a new epoch commits."""
+    _land(spark, tmp_path, 0)
+    assert len(_get_ids(f"{app}/v1/ledger/{GOLDEN}")) == 3
+    assert len(_get_ids(f"{app}/v1/transactions/{GOLDEN}")) == 3
+    _land(spark, tmp_path, 1, n=2)
+    assert len(_get_ids(f"{app}/v1/ledger/{GOLDEN}")) == 5
+    assert len(_get_ids(f"{app}/v1/transactions/{GOLDEN}")) == 5
+
+
+def test_get_before_the_first_epoch_is_empty_200(tmp_path, app, capsys):
+    """Tables created by init-tables hold no footer and no epoch yet: a
+    GET serves an empty array, not a schema-inference 500."""
+    from spectraplex_spark.__main__ import main
+
+    bp, sp = str(tmp_path / "bronze"), str(tmp_path / "silver")
+    assert main(["init-tables", "--bronze", bp, "--silver", sp]) == 0
+    capsys.readouterr()
+    for route in ("ledger", "transactions"):
+        assert _get(f"{app}/v1/{route}/{WALLET}") == (200, "[]")
