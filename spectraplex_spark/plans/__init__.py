@@ -25,245 +25,4 @@ from spectraplex_spark.plans import relational  # noqa: E402,F401
 from spectraplex_spark.plans import reference_surface  # noqa: E402,F401
 from spectraplex_spark.plans import ext  # noqa: E402,F401
 
-# --------------------------------------------------------------------------
-# Graded-window curation. The external correctness gate grades the FIRST
-# 50 registered queries, so registration order is part of the contract.
-#
-# The composition rules (freshness bar, deferral justifications, late-
-# registration precedent) are MACHINE-CHECKED by
-# spectraplex_spark/testing/freshness.py + tests/test_freshness.py — the
-# r9 verdict's task #2.  That module parses CORRECTNESS_r*.json, computes
-# per-entry latest-green, and asserts this window's legality; the prose
-# history blocks that used to live here (r8-r11 compositions) are in git
-# history, and the list below now holds ONLY the live window (the r9
-# ADVICE duplicate-name fragility is gone: _curate asserts uniqueness).
-#
-# Round-14 composition (the r13 verdict's pre-plan, executed): freshness
-# projected 45 mandatory for 50 slots — the 1 never-graded r13 late
-# registration (curation_run_e2e, the r13 flagship composition whose
-# driver hash lands this round per the late-registration protocol) +
-# the 44 remaining r10-vintage entries that age out at the r11 bar.
-# Five slots of slack (the r13 verdict's task #4 target met with room);
-# all five go to EARLY regrades of r11-vintage entries, smoothing the
-# r15 load from 49 aging entries to 44:
-#   (a) solana_normalize_golden — the flagship U1/U2 golden (and the
-#       demotion sibling carrying solana_normalize_udtf_golden), kept
-#       driver-fresh beside the benched normalize_throughput (r13);
-#   (b) events_by_user — the reference serving core (S4/S5 + P1/P2
-#       projection/predicate evidence rides on it);
-#   (c) knn_join_topk — demotion sibling of knn_join_topk_arrow;
-#   (d) session_stats — demotion sibling of session_window_builtin;
-#   (e) simsearch_ivf_topk — demotion sibling of ivf_recall_report,
-#       grading beside the in-window quantized-ANN block (sq/bq/pq)
-#       so the whole ANN family is re-hashed in one round.
-# Total: 44 aging + 1 late + 5 early = exactly 50, ZERO deferrals
-# (third zero-deferral window in a row).
-# New r14 queries register late-only (tail of the catalog; they grade
-# r15 per the standing precedent) and are declared in
-# freshness.LATE_REGISTRATIONS.  Prior compositions (r8-r13) live in
-# git history.
-# --------------------------------------------------------------------------
-_GRADED_PRIORITY = [
-    # ---- round 14 window (exactly 50) ----
-    # (a) never driver-graded (the r13 late registration)
-    "curation_run_e2e",
-    # (b) early regrades of r11-vintage entries (see rationale above)
-    "solana_normalize_golden",
-    "events_by_user",
-    "knn_join_topk",
-    "session_stats",
-    "simsearch_ivf_topk",
-    # (c) round-10 vintage — all 44 that age out at the r11 bar
-    "agg_percentiles",
-    "bm25_ranked_topk",
-    "compaction_roundtrip",
-    "corpus_mixture_sample",
-    "corpus_vocab_report",
-    "correlated_above_avg_orders",
-    "data_quality_report",
-    "decontam_ngram_overlap",
-    "doc_chunks_report",
-    "embedding_covariance_report",
-    "embedding_jl_projection",
-    "embedding_kmeans_clusters",
-    "epoch_change_feed_roundtrip",
-    "feature_stats_report",
-    "fuzzy_decontam_planted",
-    "group_split_report",
-    "grpc_replay_ingest_golden",
-    "incremental_spans_planted",
-    "index_conjunctive_topk",
-    "index_phrase_search",
-    "join_anti_customers_without_orders",
-    "lang_confusion_matrix",
-    "media_phash_planted",
-    "mixture_repeat_plan_report",
-    "mixture_upsample_counts",
-    "pagerank_ranks",
-    "q11_important_stock",
-    "q2_min_cost_supplier",
-    "repeated_spans_report",
-    "rpc_ingest_datasource",
-    "semantic_dedup_planted",
-    "simsearch_bq_topk",
-    "simsearch_pq_topk",
-    "simsearch_sq_topk",
-    "sliced_examples_report",
-    "source_overlap_matrix",
-    "source_quota_scalable",
-    "span_dedup_clean",
-    "stateful_balance_replay",
-    "stream_dedup_replay",
-    "stream_interval_join_replay",
-    "stream_right_join_replay",
-    "temperature_mixture_shares",
-    "zorder_curve_events",
-]
-
-# --------------------------------------------------------------------------
-# Graded-surface debt paydown (r11 verdict tasks #2/#3): 211 entries
-# against a 50-slot window with a 3-round bar is structurally
-# oversubscribed (~150 sustainable).  Each entry below is a VARIANT of a
-# sibling that carries the same SURVEY §2 / pipeline-component evidence;
-# it is demoted from the driver-graded catalog to pytest-pinned parity:
-# the builder and DuckDB oracle still run (dual-SF, every round) in
-# tests/test_oracle_parity.py via PARITY_ONLY, and most pairs are
-# additionally pinned bit-equal to their sibling by a dedicated pytest.
-# value = (in-catalog sibling carrying the evidence, why the pair is one
-# code path).  _curate verifies both directions at import.
-# --------------------------------------------------------------------------
-_DEMOTED_PARITY_ONLY: dict[str, tuple[str, str]] = {
-    # -- the five r7-vintage stragglers (r11 verdict task #3, option b) --
-    "knn_join_topk_arrow": (
-        "knn_join_topk",
-        "Arrow int-matmul twin of the same kNN-join harness, pinned "
-        "bit-equal by tests/test_knn_join.py",
-    ),
-    "multimodal_resize": (
-        "multimodal_frame_sample",
-        "same mapInPandas multimodal family (binary payload + typed "
-        "meta); content-hash oracles share one seam",
-    ),
-    "session_window_builtin": (
-        "session_stats",
-        "builtin session_window vs the manual gap-split build of the "
-        "SAME sessionization, pinned equal by pytest",
-    ),
-    "simhash_dup_groups_planted": (
-        "simhash_neighbor_pairs_planted",
-        "same SimHash planted-twin family over one simhash64 kernel",
-    ),
-    "solana_normalize_udtf_golden": (
-        "solana_normalize_golden",
-        "literal @udtf re-expression of the same normalize pipeline, "
-        "pinned equal by tests/test_normalize_udtf.py",
-    ),
-    # -- round-8-vintage variants (frees 6 of the 10 oversubscribed slots) --
-    "array_posexplode_embeddings": (
-        "array_ops_embeddings",
-        "same array-function family (posexplode vs transform/zip_with "
-        "surface) over the embeddings table",
-    ),
-    "bpe_encode_topk": (
-        "bpe_encode_pandas_topk",
-        "expression-path encode vs the recommended broadcast-tokenizer "
-        "pandas path; pinned bit-equal by tests/test_bpe.py",
-    ),
-    "domain_cap_sample": (
-        "domain_cap_scalable",
-        "single-window vs two-phase hot-key build of the SAME per-domain "
-        "cap, pinned equal by pytest",
-    ),
-    "embedding_neardup_pairs": (
-        "embedding_neardup_bucketed",
-        "same hyperplane-LSH embedding near-dup family (pairs view vs "
-        "bucketed grouping of one banding kernel)",
-    ),
-    "ivf_recall_report": (
-        "simsearch_ivf_topk",
-        "recall probe OVER the graded IVF path (ivf_persisted_recall "
-        "r10 keeps a second graded recall view)",
-    ),
-    "scalar_string_parts": (
-        "scalar_string_advanced",
-        "same scalar string-function family (split/substring vs "
-        "regex/translate surfaces)",
-    ),
-    # -- r9/r10-vintage variants (pure forward-load paydown) --
-    "corpus_prep_planted": (
-        "corpus_prep_pipeline",
-        "the same 5-stage curation pipeline on a planted-duplicate "
-        "fixture; recall-vs-plant is pinned by pytest",
-    ),
-    "udaf_value_stats": (
-        "udaf_value_stats_scalable",
-        "GROUPED_AGG pandas UDAF vs its partial-agg scalable twin, "
-        "pinned equal by tests/test_udaf.py",
-    ),
-    "simsearch_pq_rerank": (
-        "simsearch_pq_topk",
-        "ADC shortlist + exact rerank stage OVER the graded PQ path "
-        "(same codebooks, same LUT kernel)",
-    ),
-    "source_quota_sample": (
-        "source_quota_scalable",
-        "single-window vs two-phase hot-source build of the SAME quota "
-        "sampler, pinned equal by pytest",
-    ),
-    # -- round-13 slack restoration (r12 verdict task #4) --
-    "agg_cube_orders": (
-        "grouping_sets_orders",
-        "CUBE is a GROUPING SETS shorthand over the same grouping-ID "
-        "aggregation path; the general form stays graded (and "
-        "agg_rollup_lineitem keeps the other shorthand graded)",
-    ),
-    "window_moving_sum": (
-        "window_running_revenue",
-        "same window-frame aggregation family (bounded ROWS BETWEEN "
-        "frame vs unbounded running frame) over one ordered-window path",
-    ),
-    "scalar_date_orders": (
-        "scalar_date_arith",
-        "same scalar date/timestamp function family (F11); the arith "
-        "entry exercises a superset of the date-part surface",
-    ),
-}
-
-#: Demoted variants: still built + oracle-graded by the local parity
-#: suite every round (dual-SF), no longer on the driver's 50-slot budget.
-PARITY_ONLY: dict[str, Query] = {}
-
-
-def _curate(order: list[str]) -> None:
-    if len(order) != len(set(order)):  # r9 ADVICE #5: no silent dedup
-        dupes = sorted({n for n in order if order.count(n) > 1})
-        raise RuntimeError(f"graded-priority contains duplicates: {dupes}")
-    # demotions first: fail loudly on typos and on siblings that left
-    missing_dem = [n for n in _DEMOTED_PARITY_ONLY if n not in CATALOG]
-    if missing_dem:
-        raise RuntimeError(f"demoted names not in CATALOG: {missing_dem}")
-    for name in _DEMOTED_PARITY_ONLY:
-        PARITY_ONLY[name] = CATALOG.pop(name)
-    bad_sib = [
-        f"{n}→{sib}"
-        for n, (sib, _) in _DEMOTED_PARITY_ONLY.items()
-        if sib not in CATALOG
-    ]
-    if bad_sib:  # a sibling that is itself demoted/absent can't carry evidence
-        raise RuntimeError(f"demotion siblings not in graded CATALOG: {bad_sib}")
-    missing = [n for n in order if n not in CATALOG]
-    if missing:  # fail loudly: a typo here silently un-grades an operator
-        raise RuntimeError(f"graded-priority names not in CATALOG: {missing}")
-    tail = [n for n in CATALOG if n not in set(order)]
-    reordered = {n: CATALOG[n] for n in [*order, *tail]}
-    CATALOG.clear()
-    CATALOG.update(reordered)
-
-
-_curate(_GRADED_PRIORITY)
-
-#: Every query the repo ships, graded + parity-only — the surface the
-#: local test suites and probes iterate (the driver iterates CATALOG).
-ALL_QUERIES: dict[str, Query] = {**CATALOG, **PARITY_ONLY}
-
-__all__ = ["ALL_QUERIES", "CATALOG", "PARITY_ONLY", "Query", "table"]
+__all__ = ["CATALOG", "Query", "table"]

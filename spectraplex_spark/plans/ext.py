@@ -6757,8 +6757,7 @@ def hybrid_rrf_fusion(spark, sf_dir):
 # --------------------------------------------------------------------------
 # Round-13 growth (r12 verdict task #8): the END-TO-END curation run —
 # the integration-level evidence that the per-stage graded entries
-# COMPOSE. Registers at the catalog tail (grades r14 per the standing
-# late-registration precedent; declared in freshness.LATE_REGISTRATIONS).
+# COMPOSE.
 # --------------------------------------------------------------------------
 
 

@@ -21,9 +21,12 @@ CATALOG: dict[str, Query] = {}
 
 
 def query(name: str, oracle: str | None, bench: bool = False, doc: str = ""):
-    """Decorator registering a builder in the catalog."""
+    """Decorator registering a builder in the catalog. A name registers
+    once: a second registration raises instead of replacing the first."""
 
     def wrap(fn: Callable[[SparkSession, str], DataFrame]):
+        if name in CATALOG:
+            raise ValueError(f"query {name!r} is already registered")
         CATALOG[name] = Query(name=name, builder=fn, oracle=oracle, bench=bench, doc=doc or (fn.__doc__ or ""))
         return fn
 

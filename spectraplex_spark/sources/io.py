@@ -15,12 +15,10 @@ Reference mapping:
     nothing: a wallet's rows are spread over every file.
 
 Scale notes: the anti-join reads ONLY the id column of the target
-(Parquet column pruning), so its cost is O(ids), not O(data). At 100 TB
-with a date-partitioned target, pass ``scope`` to restrict the dedup
-window to the partitions the batch can overlap (bounded-state dedup —
-same reasoning as a streaming watermark). On Delta/Iceberg this whole
-protocol becomes a MERGE; plain Parquet has no transactional upsert, so
-append + anti-join is the portable expression.
+(Parquet column pruning), so its cost is O(ids), not O(data) — but it
+reads every id the table holds, so a landing's cost grows with history.
+On Delta/Iceberg this whole protocol becomes a MERGE; plain Parquet has
+no transactional upsert, so append + anti-join is the portable expression.
 """
 
 from __future__ import annotations
@@ -250,15 +248,11 @@ def idempotent_append(
     path: str,
     id_col: str = "id",
     partition_by: tuple[str, ...] = (),
-    scope: F.Column | None = None,
     commit_epochs: bool = True,
 ) -> int:
     """K1/K2: append only rows whose id is not already in the target.
 
-    Returns the number of rows appended. ``scope`` optionally restricts
-    which target partitions are scanned for existing ids (predicate
-    pushdown prunes them) — at 100 TB you scope the dedup window, e.g.
-    ``col('ingest_date') >= batch_min_date``.
+    Returns the number of rows appended.
 
     Within-batch duplicates are also collapsed (first occurrence wins
     arbitrarily among identical ids — the reference's ON CONFLICT keeps
@@ -318,8 +312,6 @@ def idempotent_append(
                 f"{list(partition_by)} — the batch would land at the "
                 "wrong directory depth and break every later read"
             )
-        if scope is not None:
-            existing = existing.filter(scope)
         # Only id_col is read from the target: column pruning keeps this
         # O(row-count), never O(bytes). NULL-SAFE join: a plain equi-key
         # anti-join never matches NULL ids, so a corrupt all-null row

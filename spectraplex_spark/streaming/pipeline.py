@@ -24,8 +24,7 @@ Scale notes: normalize is stateless (narrow ops only), so the stream
 scales by source partitions alone. The only stateful operator here is
 the windowed aggregate; its state is bounded by the watermark. Dedup
 state is NOT kept in the stream (unbounded at 100 TB) — idempotency
-lives in the sink protocol instead, scoped to the partitions a batch
-can touch.
+lives in the sink protocol instead.
 """
 
 from __future__ import annotations

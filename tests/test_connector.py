@@ -1,7 +1,7 @@
 """Connector tests against the localhost JSON-RPC fixture node
-(tests/rpc_fixture.py). The container has no outbound network, so the
-fixture plays the Solana node with programmable fault injection, to pin
-the retry / rate-limit / log-and-skip semantics of
+(spectraplex_spark/testing/rpc_fixture.py). The container has no
+outbound network, so the fixture plays the Solana node with programmable
+fault injection, to pin the retry / rate-limit / log-and-skip semantics of
 adapters/src/solana.rs:23-58.
 """
 
@@ -11,7 +11,6 @@ import json
 
 import pytest
 
-from rpc_fixture import WALLET, _sig, serve_node
 from spectraplex_spark.sources.connector import (
     RpcError,
     SolanaRpcClient,
@@ -20,6 +19,7 @@ from spectraplex_spark.sources.connector import (
     ingest_history,
 )
 from spectraplex_spark.sources.ingest import conform_to_bronze, RAW_FETCH_SCHEMA
+from spectraplex_spark.testing.rpc_fixture import WALLET, _sig, serve_node
 
 
 @pytest.fixture()
@@ -226,7 +226,6 @@ def test_datasource_api_partitions_per_wallet(spark):
     """The Python Data Source plans one InputPartition per wallet —
     partition count IS the concurrency/rate-policy knob."""
     from spectraplex_spark.sources.datasource import SolanaRpcDataSource
-    from spectraplex_spark.testing.rpc_fixture import WALLET, serve_node
 
     spark.dataSource.register(SolanaRpcDataSource)
     with serve_node(3) as node:

@@ -28,13 +28,13 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from spectraplex_spark.plans import ALL_QUERIES
+from spectraplex_spark.plans import CATALOG
 from spectraplex_spark.schemas import TESTDATA_TABLES
 
 from tests.conftest import SF_DIR_ORACLE
 
-ORACLE_QUERIES = sorted(name for name, q in ALL_QUERIES.items() if q.oracle is not None)
-ROWS_ONLY_QUERIES = sorted(name for name, q in ALL_QUERIES.items() if q.oracle is None)
+ORACLE_QUERIES = sorted(name for name, q in CATALOG.items() if q.oracle is not None)
+ROWS_ONLY_QUERIES = sorted(name for name, q in CATALOG.items() if q.oracle is None)
 
 
 def _key(v):
@@ -84,7 +84,7 @@ def ddb():
 
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
 def test_oracle_parity(spark, ddb, name):
-    q = ALL_QUERIES[name]
+    q = CATALOG[name]
     spark_pdf = q.builder(spark, SF_DIR_ORACLE).toPandas()
     duck_pdf = ddb.execute(q.oracle).df()
 
@@ -104,7 +104,7 @@ def test_oracle_parity(spark, ddb, name):
 def test_rows_only_queries_run(spark, name):
     """No-oracle ops must at least execute, return a stable schema, and
     produce driver-canonicalizable cells (no raw arrays/maps)."""
-    df = ALL_QUERIES[name].builder(spark, SF_DIR_ORACLE)
+    df = CATALOG[name].builder(spark, SF_DIR_ORACLE)
     assert df.columns
     pdf = df.toPandas()
     for row in pdf.head(5).itertuples(index=False):

@@ -10,7 +10,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from spectraplex_spark.plans import ALL_QUERIES as CATALOG
+from spectraplex_spark.plans import CATALOG
 from tests.conftest import SF_DIR
 
 

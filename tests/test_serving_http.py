@@ -15,8 +15,8 @@ import urllib.request
 
 import pytest
 
-from rpc_fixture import WALLET, serve_node
 from spectraplex_spark.serving_http import AppState, make_server
+from spectraplex_spark.testing.rpc_fixture import WALLET, serve_node
 from tests.test_normalize_golden import WALLET as GOLDEN, bronze_row, solana_tx
 
 
