@@ -3721,7 +3721,7 @@ def data_quality_report(spark, sf_dir):
     doc="K1/K2 append sinks under the epoch-commit protocol "
     "(sources/commit.py) certified end to end: batch 1 (event_id % 3 "
     "== 0) lands and commits epoch 0; batch 2 (the rest) lands with "
-    "its epoch commit suppressed — the simulated crash between "
+    "no epoch commit — the simulated crash between "
     "Spark's job commit and the epoch marker. The committed view must "
     "show EXACTLY batch 1 (committed_before_adopt, hash-pinned to the "
     "oracle's subquery count — a torn batch is invisible, never a "
@@ -3750,9 +3750,11 @@ def epoch_append_roundtrip(spark, sf_dir):
     idempotent_append(
         ev.filter(F.col("id") % 3 == 0), path, id_col="id", partition_by=("event_type",)
     )
-    idempotent_append(
-        ev, path, id_col="id", partition_by=("event_type",), commit_epochs=False
-    )
+    # the crash between Spark's job commit and the epoch commit: the
+    # rest of the events land as a plain append that no epoch covers
+    ev.filter(F.col("id") % 3 != 0).write.mode("append").partitionBy(
+        "event_type"
+    ).parquet(path)
     n_before = read_committed_epochs(spark, path).count()
     n_replay = idempotent_append(ev, path, id_col="id", partition_by=("event_type",))
     if n_replay:  # torn batch must NOT be re-admitted by a replay

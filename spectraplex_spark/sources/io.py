@@ -29,7 +29,11 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from spectraplex_spark.schemas import BRONZE_SCHEMA, SILVER_SCHEMA
-from spectraplex_spark.sources.commit import _epoch_paths, read_committed_epochs
+from spectraplex_spark.sources.commit import (
+    _epoch_paths,
+    commit_append_epoch,
+    read_committed_epochs,
+)
 
 
 def open_source(
@@ -190,15 +194,17 @@ def _read_target(spark: SparkSession, path: str) -> DataFrame | None:
     """The Parquet dataset at ``path``, or None if there is none.
 
     One read both probes and opens the target, so listing and schema
-    inference run once. Probed by attempting the read rather than via
-    the private ``spark._jvm`` Hadoop gateway: the read works
-    identically under Spark Connect (no JVM access from the client; the
-    schema access is what resolves a lazy Connect frame) and for any
-    filesystem scheme the session supports. Schema resolution touches
-    only footers — no data scan. A missing/empty path raises
-    AnalysisException → None; genuinely corrupt targets still raise on
-    the subsequent real read.
+    inference run once. The append protocol already assumes a local
+    path (the layout guard lists it with ``os.listdir``, the epoch
+    commit walks it with ``os.walk``), so a missing directory is None
+    before any read — Spark would log a FileNotFoundException stack
+    trace for it. A directory that holds no parquet (``init-tables``
+    output) raises AnalysisException on the read → None. Schema
+    resolution touches only footers — no data scan; genuinely corrupt
+    targets still raise on the subsequent real read.
     """
+    if not os.path.isdir(path):
+        return None
     try:
         df = spark.read.parquet(path)
         df.schema
@@ -216,31 +222,32 @@ def _target_exists(spark: SparkSession, path: str) -> bool:
     return _read_target(spark, path) is not None
 
 
+def _name_value_dirs(path: str) -> list[str]:
+    """The ``name=value`` directories directly under ``path``, sorted.
+
+    NO underscore exclusion: partition columns named _tp/_gb are
+    legitimate (the postings/grams bucket layouts) and Spark's sidecar
+    artifacts (_SUCCESS, _epochs, _config) never contain '=' — the '='
+    test alone separates the two (full-suite catch r13: the first cut
+    skipped '_tp=...' and refused every incremental index append).
+    """
+    return sorted(
+        d for d in os.listdir(path) if "=" in d and os.path.isdir(os.path.join(path, d))
+    )
+
+
 def _existing_partition_layout(path: str) -> tuple[str, ...]:
     """The ordered partition-column chain of a table's on-disk Hive
     layout, read from the first ``name=value`` directory path (every
     branch of a valid layout carries the same chain)."""
-    import os
     from urllib.parse import unquote
 
     cols: list[str] = []
     cur = path
-    while True:
-        # NO underscore exclusion: partition columns named _tp/_gb are
-        # legitimate (the postings/grams bucket layouts) and Spark's
-        # sidecar artifacts (_SUCCESS, _epochs, _config) never contain
-        # '=' — the '=' test alone separates the two (full-suite catch
-        # r13: the first cut skipped '_tp=...' and refused every
-        # incremental index append).
-        subs = sorted(
-            d
-            for d in os.listdir(cur)
-            if "=" in d and os.path.isdir(os.path.join(cur, d))
-        )
-        if not subs:
-            return tuple(cols)
+    while subs := _name_value_dirs(cur):
         cols.append(unquote(subs[0].split("=", 1)[0]))
         cur = os.path.join(cur, subs[0])
+    return tuple(cols)
 
 
 def idempotent_append(
@@ -248,7 +255,6 @@ def idempotent_append(
     path: str,
     id_col: str = "id",
     partition_by: tuple[str, ...] = (),
-    commit_epochs: bool = True,
 ) -> int:
     """K1/K2: append only rows whose id is not already in the target.
 
@@ -335,10 +341,7 @@ def idempotent_append(
             if partition_by:
                 writer = writer.partitionBy(*partition_by)
             writer.parquet(path)
-            if commit_epochs:
-                from spectraplex_spark.sources.commit import commit_append_epoch
-
-                commit_append_epoch(path)
+            commit_append_epoch(path)
     finally:
         batch.unpersist()
     return n

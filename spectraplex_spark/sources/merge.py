@@ -29,6 +29,16 @@ batch-sized) + one union + one write to a STAGED directory, then a
 directory swap — Spark cannot overwrite a dataset it is reading, and
 stage-then-swap at the manifest level is how every table format
 commits (compact_to's discipline).
+
+The swap never derives a directory name from a partition value. It
+replaces the directories it OBSERVED: the parents of the scoped rows'
+``_metadata.file_path`` (the old partitions) and the ``name=value``
+directories Spark wrote under the staged copy (the new ones). A
+scoped directory with no staged twin is a pure deletion and is
+removed. Values whose directory text reads back in another form
+(``p=01`` reads back as int 1) are therefore no special case: the
+rewrite carries the partition column as the target reads it back, so
+``p=01`` is rewritten as ``p=1`` and the old ``p=01`` goes.
 """
 
 from __future__ import annotations
@@ -37,127 +47,19 @@ import json
 import os
 import shutil
 import uuid
+from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from spectraplex_spark.sources.commit import (
     TableInconsistentError,
     validate_commit_manifest,
     write_commit_manifest,
 )
+from spectraplex_spark.sources.io import _name_value_dirs
 
 OP_COL = "_op"
 INTENT_NAME = "_spectraplex_intent.json"
-
-# Spark's partitioned writer names directories via Hive path escaping
-# (ExternalCatalogUtils.escapePathName): control chars and this set are
-# %XX-encoded, and NULL/empty partition values become the Hive default
-# sentinel. The swap must use the SAME names or it silently misses the
-# real directories (rewrites deleted, merge a no-op).
-_ESCAPED_CHARS = set('"#%\'*/:=?\\{[]^\x7f') | {chr(c) for c in range(1, 32)}
-_HIVE_NULL_PART = "__HIVE_DEFAULT_PARTITION__"
-
-
-def _escape_path_name(name: str) -> str:
-    return "".join(
-        "%{:02X}".format(ord(ch)) if ch in _ESCAPED_CHARS else ch for ch in name
-    )
-
-
-def _partition_dir(partition_col: str, value) -> str:
-    """The directory name Spark's writer produces for this partition
-    value — Hive path escaping plus the NULL/empty sentinel, booleans
-    lowercased the way Spark stringifies them."""
-    if value is None or value == "":
-        return f"{_escape_path_name(partition_col)}={_HIVE_NULL_PART}"
-    s = ("true" if value else "false") if isinstance(value, bool) else str(value)
-    return f"{_escape_path_name(partition_col)}={_escape_path_name(s)}"
-
-
-def _inference_safe(text: str) -> bool:
-    """True iff a partition directory's value text survives Spark's
-    partition-type inference and comes back with the SAME lexical form.
-
-    Numeric-LOOKING strings that don't round-trip ('01', '+1', '1.10')
-    are the poison case: the reader infers 1 / 1.1, every predicted
-    directory name drifts from the real one, and the staged cross-checks
-    can't see it because prediction and staged output drift TOGETHER —
-    the old partition would silently survive the swap (review finding).
-    """
-    import re
-
-    if re.fullmatch(r"[+-]?\d+", text):
-        if len(text.lstrip("+-")) > 38:
-            # exceeds DECIMAL(38): Spark falls through to DOUBLE and the
-            # value reads back as '1e+41'-style scientific notation —
-            # permanent lexical drift (review finding r13, verified on
-            # Spark 4.1.2)
-            return False
-        try:
-            return str(int(text)) == text
-        except ValueError:  # pragma: no cover - astronomically long digits
-            return False
-    # DATE / TIMESTAMP inference (review finding r13): Spark also tries
-    # both on partition values.  The drift class, pinned by a probe
-    # matrix on Spark 4.1.2 (BASELINE.md r13): a padded timestamp with
-    # a SINGLE-digit fraction infers as TIMESTAMP and its read-back
-    # str() emits 6-digit microseconds ('...56.5' → '...56.500000',
-    # '...56.0' → '...56') — permanent lexical drift.  Everything else
-    # date/timestamp-shaped either round-trips (padded dates,
-    # seconds-precision timestamps) or is NOT inferred at all and
-    # survives as the identical string (probed: '2024-1-1', 2+-digit
-    # fractions incl. '.500000'/'.000000', 'T' separator, no-seconds,
-    # unpadded hour, leading/trailing whitespace, invalid months).
-    m = re.fullmatch(r"\d{4}-\d{2}-\d{2} \d{2}:\d{2}:\d{2}(\.(\d+))?", text)
-    if m:
-        frac = m.group(2)
-        return frac is None or len(frac) != 1
-    # Spark's fallback is Double.parseDouble, which ALSO accepts
-    # exponent-only forms without a dot ('1e5' → 100000.0) and the
-    # Infinity/NaN spellings — all of which drift on read-back, so they
-    # must hit the float round-trip check / hard reject too (r11 ADVICE:
-    # the old pattern required a decimal point and let '1e5' through).
-    num = r"[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?"
-
-    def java_double_parses(t: str) -> bool:
-        """Whether Double.parseDouble accepts ``t`` (pre-trimmed): the
-        Double.valueOf grammar — EXACT-case NaN/Infinity (parseDouble
-        is case-sensitive: 'nan'/'inf'/'INFINITY' all throw and stay
-        safe strings), decimal forms with an optional f/F/d/D type
-        suffix ('123d' → 123.0; the suffix attaches to NUMERIC
-        literals only, so 'NaNd' does NOT parse), and hexadecimal
-        float literals ('0x1p3' → 8.0)."""
-        if re.fullmatch(r"[+-]?(Infinity|NaN)", t):
-            return True
-        core = t[:-1] if t and t[-1] in "fFdD" else t
-        if re.fullmatch(num, core):
-            return True
-        return bool(
-            re.fullmatch(r"[+-]?0[xX][0-9a-fA-F]*\.?[0-9a-fA-F]*[pP][+-]?\d+", core)
-        )
-
-    # parseDouble TRIMS like String.trim (chars ≤ U+0020) before
-    # parsing, while int/long/decimal inference throws on whitespace —
-    # so ' 1' infers as DOUBLE 1.0 and the directory name drifts.  Any
-    # whitespace-wrapped value whose trimmed core parses is unsafe;
-    # a trimmed core that does NOT parse falls through every inference
-    # and survives as the identical string.
-    trimmed = re.sub(r"^[\x00-\x20]+|[\x00-\x20]+$", "", text)
-    if trimmed != text:
-        # (date/timestamp inference does NOT trim — probed: a
-        # whitespace-wrapped date survives as the identical string —
-        # so only the parseDouble trim matters here)
-        return not java_double_parses(trimmed)
-    if re.fullmatch(r"[+-]?(Infinity|NaN)", text):
-        return False  # reads back as Infinity/NaN, not the string
-    if java_double_parses(text) and not re.fullmatch(num, text):
-        return False  # suffix / hex forms: str(float) never emits them
-    if re.fullmatch(num, text) and ("." in text or "e" in text or "E" in text):
-        try:
-            return str(float(text)) == text
-        except (ValueError, OverflowError):
-            return False
-    return True
 
 
 def _write_intent(staged_dir: str, intent: dict) -> None:
@@ -199,7 +101,13 @@ def merge_upsert(
     definition). Workloads whose partition value is immutable per key
     (e.g. event-date partitioning keyed by event id) can pass
     ``probe_moved_keys=False`` to keep the fully partition-pruned
-    read; that flag is a CONTRACT that keys never change partition."""
+    read; that flag is a CONTRACT that keys never change partition.
+
+    With ``partition_col``, the partition column of the upserts is cast
+    to the type the target reads back before the union, and the swap
+    replaces exactly the directories that held the scoped rows plus
+    those the staged write produced — both observed on disk, both
+    recorded in the intent record for ``recover_merge``."""
     # A trailing slash would place the staged/old siblings INSIDE the
     # target (breaking the whole-table rename with EINVAL after the
     # intent landed, and hiding them from _siblings/recover_merge).
@@ -298,29 +206,18 @@ def _merge_upsert_impl(
     n_del = n_updates - n_up
 
     if partition_col is not None:
-        # refuse partition values whose directory text would not survive
-        # partition-type inference: every downstream prediction
-        # (_partition_dir over READ-BACK values) would silently drift
-        from urllib.parse import unquote
-
-        prefix = f"{_escape_path_name(partition_col)}="
-        for d in os.listdir(target_path):
-            if not d.startswith(prefix) or not os.path.isdir(
-                os.path.join(target_path, d)
-            ):
-                continue
-            text = unquote(d[len(prefix):])
-            if text != _HIVE_NULL_PART and not _inference_safe(text):
-                raise TableInconsistentError(
-                    f"{target_path}: partition directory {d!r} holds a "
-                    f"value ({text!r}) that Spark's partition-type "
-                    "inference canonicalizes to a different lexical form "
-                    "— the partition-scoped swap cannot predict directory "
-                    "names for this table. Store the value in canonical "
-                    "form (e.g. no leading zeros) or merge with "
-                    "partition_col=None (whole-table swap)."
-                )
-        parts = updates.select(F.col(partition_col).alias("_p")).distinct()
+        # Partition values enter the rewrite typed as the target reads
+        # them back (partition-type inference: 'p=01' reads back as int 1,
+        # 'p=1e5' as decimal 100000), so scope rows and upserts spell each
+        # partition one way and the staged write is deterministic. A
+        # NULL-only table reads back NullType, which no value casts to;
+        # the union widens it instead.
+        part = F.col(partition_col)
+        read_back = target.schema[partition_col].dataType
+        if not isinstance(read_back, T.NullType):
+            part = part.cast(read_back)
+        upserts = upserts.withColumn(partition_col, part)
+        parts = updates.select(part.alias("_p")).distinct()
         if probe_moved_keys:
             # key-probe: partitions where the updated keys CURRENTLY
             # live — catches partition-moving upserts / stale-partition
@@ -344,14 +241,17 @@ def _merge_upsert_impl(
         if len(non_null) < len(affected):
             pred = pred | F.col(partition_col).isNull()
         scoped_target = target.filter(pred)
-        affected_dirs = sorted({_partition_dir(partition_col, v) for v in affected})
-        # partition values actually PRESENT in the target scope —
-        # needed below to verify the escaping prediction for
-        # deletion-only partitions, which Spark never re-writes (so the
-        # staged-dir cross-check can't see them). Partition-pruned +
-        # partition-column-only (values come from directory names).
-        present_vals = {
-            r[0] for r in scoped_target.select(partition_col).distinct().collect()
+        # The directories that hold the scoped rows, read from the file
+        # paths rather than predicted from values: a file path is the
+        # URL-encoded on-disk path, so one unquote gives the directory
+        # name exactly as Spark's writer escaped it.
+        scope_dirs = {
+            unquote(r[0])
+            for r in scoped_target.select(
+                F.regexp_extract("_metadata.file_path", r"([^/]+)/[^/]+$", 1)
+            )
+            .distinct()
+            .collect()
         }
         n_parts = len(affected)
     else:
@@ -368,7 +268,10 @@ def _merge_upsert_impl(
         writer = writer.partitionBy(partition_col)
     writer.parquet(staged)
     if partition_col is not None:
-        prefix = f"{_escape_path_name(partition_col)}="
+        # the swap replaces every observed directory: the scope's old
+        # ones (a pure-deletion partition has no staged twin, so the
+        # swap just removes it) and the ones Spark wrote under staged
+        affected_dirs = sorted(scope_dirs | set(_name_value_dirs(staged)))
 
         def _has_parquet(d: str) -> bool:
             return os.path.isdir(d) and any(
@@ -386,13 +289,11 @@ def _merge_upsert_impl(
         # between the swap loop and the footer write recovered into
         # the unreadable zero-file state and committed it).
         table_will_empty = not any(
-            _has_parquet(os.path.join(staged, d))
-            for d in os.listdir(staged)
-            if d.startswith(prefix)
+            _has_parquet(os.path.join(staged, d)) for d in _name_value_dirs(staged)
         ) and not any(
             _has_parquet(os.path.join(target_path, d))
-            for d in os.listdir(target_path)
-            if d.startswith(prefix) and d not in set(affected_dirs)
+            for d in _name_value_dirs(target_path)
+            if d not in affected_dirs
         )
         if table_will_empty:
             spark.createDataFrame(
@@ -400,47 +301,12 @@ def _merge_upsert_impl(
             ).repartition(1).write.mode("overwrite").parquet(
                 os.path.join(staged, affected_dirs[0])
             )
-        # every directory Spark actually wrote must be one we predicted
-        # — an escaping mismatch here would make the swap silently skip
-        # real data, so it fails loudly instead
-        staged_parts = sorted(
-            d for d in os.listdir(staged) if d.startswith(prefix)
-        )
-        unexpected = [d for d in staged_parts if d not in set(affected_dirs)]
-        if unexpected:
-            shutil.rmtree(staged)
-            raise TableInconsistentError(
-                f"staged partition dirs {unexpected!r} don't match the "
-                f"predicted escaped names {affected_dirs!r} — partition-"
-                "value escaping drift; merge aborted before any swap"
-            )
-        # The staged check above only covers partitions Spark re-wrote.
-        # A DELETION-ONLY partition (all rows removed → no staged
-        # subdir) rides entirely on the _partition_dir prediction: if
-        # the predicted name drifted from what Spark's writer produced,
-        # the swap would silently skip removing the old directory and
-        # the deleted rows would survive. Every value PRESENT in the
-        # scope was read from a real directory, so its predicted dir
-        # must exist under target_path — abort loudly on a miss.
-        missing = sorted(
-            d
-            for d in {_partition_dir(partition_col, v) for v in present_vals}
-            if d not in set(staged_parts)
-            and not os.path.isdir(os.path.join(target_path, d))
-        )
-        if missing:
-            shutil.rmtree(staged)
-            raise TableInconsistentError(
-                f"predicted deletion-only partition dirs {missing!r} not "
-                "found under the target — partition-value escaping drift "
-                "on a pure-deletion partition; merge aborted before any "
-                "swap (the old rows would otherwise silently survive)"
-            )
+        staged_parts = _name_value_dirs(staged)
     # WAL: the intent record makes the staged dir self-describing, so
     # recover_merge can roll an interrupted swap FORWARD — including
     # pure-deletion partitions that leave no staged subdirectory.
-    # "affected" holds FULL escaped dir names (e.g. "day=2024%2F01")
-    # so recovery never re-derives escaping from raw values.
+    # "affected" holds the observed dir names (e.g. "day=2024%2F01")
+    # so recovery never derives a name from a value.
     _write_intent(
         staged,
         {

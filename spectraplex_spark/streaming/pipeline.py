@@ -13,9 +13,10 @@ This module implements the described semantics on Structured Streaming:
     broker — all downstream transformations are shared.
   - slot filtering: a plain predicate on the parsed slot.
   - incremental normalize: the SAME batch ``normalize`` function inside
-    ``foreachBatch`` — batch/stream parity by construction — with the
-    idempotent-append protocol as the sink (the streaming twin of
-    ON CONFLICT DO NOTHING; checkpoint + dedup = effectively-once).
+    ``foreachBatch`` — batch/stream parity by construction — landing
+    through the batch silver sink (``write_silver``: idempotent append,
+    partitioned by entry date; the streaming twin of ON CONFLICT DO
+    NOTHING; checkpoint + dedup = effectively-once).
   - late data: event-time watermark + tumbling windows for the
     per-period stats the reference's sort-on-read anticipates
     (repo.rs:79 ORDER BY timestamp).
@@ -33,7 +34,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from spectraplex_spark.operators.normalize import normalize
 from spectraplex_spark.schemas import BRONZE_SCHEMA
-from spectraplex_spark.sources.io import idempotent_append
+from spectraplex_spark.sources.io import write_silver
 
 
 def read_bronze_stream(
@@ -153,7 +154,8 @@ def stream_normalize_to_silver(
     audit_ts: Column | None = None,
 ):
     """Incremental bronze→silver: the batch normalize inside foreachBatch,
-    landing through the idempotent-append protocol.
+    landing through the batch silver sink (``write_silver``), so streamed
+    and batch-landed silver share one entry-date layout and one table.
 
     Checkpointing gives at-least-once batch delivery; the anti-join on
     deterministic content-hash ids upgrades that to effectively-once in
@@ -161,8 +163,7 @@ def stream_normalize_to_silver(
     """
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        silver = normalize(batch_df, audit_ts=audit_ts)
-        idempotent_append(silver, silver_path, id_col="id")
+        write_silver(normalize(batch_df, audit_ts=audit_ts), silver_path)
 
     return (
         bronze_stream.writeStream.foreachBatch(process)

@@ -348,10 +348,8 @@ def test_torn_append_is_invisible_then_adoptable(spark, tmp_path):
     a replay before adoption stays a no-op (raw-directory anti-join)."""
     path = str(tmp_path / "t")
     idempotent_append(_batch(spark, 0, 10), path, partition_by=("part",))
-    # simulate the crash: land a second batch with NO epoch commit
-    idempotent_append(
-        _batch(spark, 10, 15), path, partition_by=("part",), commit_epochs=False
-    )
+    # simulate the crash: the second batch's files land with NO epoch commit
+    _batch(spark, 10, 15).write.mode("append").partitionBy("part").parquet(path)
     st = validate_epochs(path)
     assert st["epochs"] == 1 and len(st["uncommitted"]) > 0
     assert read_committed_epochs(spark, path).count() == 10
@@ -458,9 +456,7 @@ def test_vacuum_abandons_torn_batch_and_reopens_replay(spark, tmp_path):
 
     path = str(tmp_path / "t")
     idempotent_append(_batch(spark, 0, 10), path, partition_by=("part",))
-    idempotent_append(
-        _batch(spark, 10, 15), path, partition_by=("part",), commit_epochs=False
-    )
+    _batch(spark, 10, 15).write.mode("append").partitionBy("part").parquet(path)
     deleted = vacuum_uncommitted(path)
     assert deleted and validate_epochs(path)["uncommitted"] == []
     # committed files untouched; raw directory == committed union again

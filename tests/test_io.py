@@ -232,9 +232,9 @@ def test_idempotent_append_null_id_replay_is_noop(spark, tmp_path):
     batch = spark.createDataFrame(
         [(None, "x"), (1, "a")], "id long, v string"
     )
-    assert idempotent_append(batch, p, id_col="id", commit_epochs=False) == 2
+    assert idempotent_append(batch, p, id_col="id") == 2
     # exact replay: both the real and the null-id row are no-ops
-    assert idempotent_append(batch, p, id_col="id", commit_epochs=False) == 0
+    assert idempotent_append(batch, p, id_col="id") == 0
     assert spark.read.parquet(p).count() == 2
 
 

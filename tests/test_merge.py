@@ -182,34 +182,6 @@ def test_special_character_partition_values_swap_correctly(spark, tmp_path):
     assert not os.path.exists(os.path.join(path, "part=__HIVE_DEFAULT_PARTITION__"))
 
 
-def test_deletion_only_escaping_drift_aborts_before_swap(spark, tmp_path, monkeypatch):
-    """The staged-dir cross-check only sees partitions Spark re-wrote;
-    a DELETION-ONLY partition rides on the _partition_dir prediction
-    alone. A drifted prediction must abort loudly BEFORE any swap —
-    the silent alternative leaves the deleted rows alive."""
-    import spectraplex_spark.sources.merge as m
-    from spectraplex_spark.sources.commit import TableInconsistentError
-
-    path = str(tmp_path / "t")
-    _seed(spark, path)
-    real = m._partition_dir
-
-    def drifted(col, value):
-        return f"{col}=DRIFTED" if value == "b" else real(col, value)
-
-    monkeypatch.setattr(m, "_partition_dir", drifted)
-    updates = spark.createDataFrame(
-        [(i, None, "b", "delete") for i in range(5, 10)],
-        "k long, v string, part string, _op string",
-    )
-    before = _read(spark, path)
-    with pytest.raises(TableInconsistentError, match="deletion-only"):
-        merge_upsert(spark, path, updates, "k", partition_col="part")
-    assert _read(spark, path) == before  # nothing swapped
-    leftovers = [d for d in os.listdir(tmp_path) if "__staged" in d]
-    assert leftovers == []  # staged dir cleaned up on abort
-
-
 def test_null_merge_key_rejected(spark, tmp_path):
     import pyspark.sql.functions as F
     import pytest as _pytest
@@ -251,31 +223,6 @@ def test_merge_refuses_epoch_tables(spark, tmp_path):
         merge_upsert(spark, t, upd, "k")
 
 
-def test_merge_refuses_inference_unsafe_partition_values(spark, tmp_path):
-    """A 'part=01' directory reads back as int 1, so every directory
-    prediction drifts and the old partition would silently survive the
-    swap — the merge must refuse such tables loudly (review finding)."""
-    import pytest as _pytest
-
-    from spectraplex_spark.sources.merge import _inference_safe, merge_upsert
-
-    assert _inference_safe("2024-01-01") and _inference_safe("abc")
-    assert _inference_safe("1") and _inference_safe("1.5")
-    assert not _inference_safe("01")
-    assert not _inference_safe("+1")
-    assert not _inference_safe("1.10")
-
-    t = str(tmp_path / "t")
-    spark.createDataFrame(
-        [(1, "01"), (2, "02")], "k long, p string"
-    ).write.partitionBy("p").parquet(t)
-    upd = spark.createDataFrame(
-        [(1, "02", "upsert")], "k long, p string, _op string"
-    )
-    with _pytest.raises(Exception, match="inference"):
-        merge_upsert(spark, t, upd, "k", partition_col="p")
-
-
 def test_recover_whole_forward_rename_before_intent_removal(spark, tmp_path):
     """The crash window the old order left: staged dir present WITH its
     intent, target already gone — recovery must roll forward (and a
@@ -300,39 +247,6 @@ def test_recover_whole_forward_rename_before_intent_removal(spark, tmp_path):
     assert recover_merge(t) == "whole-forward"
     assert not os.path.exists(os.path.join(t, INTENT_NAME))
     assert spark.read.parquet(t).count() == 3
-
-
-def test_inference_safe_rejects_exponent_and_inf_nan_spellings():
-    """r11 ADVICE: Spark's partition-type fallback is Double.parseDouble,
-    which also accepts exponent-only forms without a dot ('1e5' →
-    100000.0) and Infinity/NaN spellings — every one must be rejected
-    (none round-trips to the same lexical form)."""
-    from spectraplex_spark.sources.merge import _inference_safe
-
-    for poison in (
-        "1e5", "1E5", "2e-3", "+3e4", "-1e2", "12e0",
-        "Infinity", "-Infinity", "+Infinity", "NaN",
-        # parseDouble type suffixes and hex-float literals (same class)
-        "123d", "1.5f", "2e3D", "-7F",
-        "0x1p3", "0X1.8p1", "-0x1p-2", "0x1p3f",
-        # parseDouble TRIMS (String.trim) while int/decimal inference
-        # throws on whitespace: wrapped numerics infer as DOUBLE
-        " 1", "1.5 ", " 2e3 ", "\tNaN", " 0x1p3 ", " 7d",
-    ):
-        assert not _inference_safe(poison), poison
-    # plain text and round-tripping numerics remain safe
-    for ok in ("2024-01-01", "abc", "1", "1.5", "e5", "nano", "infra",
-               "d", "f", "1dd", "x1p3", "0x1p", "id", "worldF",
-               # suffix attaches to numeric literals only in the
-               # Double.valueOf grammar — these stay safe strings
-               "NaNd", "Infinityf",
-               # parseDouble is CASE-SENSITIVE: these throw and stay
-               # safe strings (review finding: the first fix was
-               # IGNORECASE and wrongly blocked merges on them)
-               "nan", "inf", "Inf", "-inf", "INFINITY", "nAn",
-               # wrapped NON-numerics also stay safe strings
-               " abc ", " nan "):
-        assert _inference_safe(ok), ok
 
 
 def test_partitioned_delete_of_last_row_keeps_table_readable(spark, tmp_path):
@@ -362,30 +276,6 @@ def test_partitioned_delete_of_last_row_keeps_table_readable(spark, tmp_path):
     assert [(r["k"], r["v"], r["part"]) for r in spark.read.parquet(t).collect()] == [
         (5, "v5", "p1")
     ]
-
-
-def test_inference_safe_timestamp_and_decimal_overflow_classes():
-    """r13 review: Spark 4.1.2 also infers DATE/TIMESTAMP on partition
-    values (probe matrix in BASELINE.md). The drift class is a padded
-    timestamp with a SINGLE-digit fraction ('.5' reads back '.500000',
-    '.0' loses the fraction); >38-digit integers overflow DECIMAL and
-    infer DOUBLE ('1e+41'). Everything else date-shaped round-trips or
-    stays a string."""
-    from spectraplex_spark.sources.merge import _inference_safe
-
-    for poison in (
-        "2024-01-01 12:34:56.5", "2024-01-01 12:34:56.0",
-        "1999-12-31 23:59:59.9", "9" * 41, "1" * 39,
-    ):
-        assert not _inference_safe(poison), poison
-    for ok in (
-        "2024-01-01", "0001-01-01", "2024-13-01", "2024-1-1",
-        "2024-01-01 12:34:56", "2024-01-01 12:34:56.50",
-        "2024-01-01 12:34:56.500000", "2024-01-01 12:34:56.000000",
-        "2024-01-01T12:34:56", "2024-01-01 12:34", " 2024-01-01",
-        "2024-01-01 2:34:56", "9" * 38,
-    ):
-        assert _inference_safe(ok), ok
 
 
 def test_merge_rejects_schema_drifted_updates(spark, tmp_path):
@@ -460,3 +350,101 @@ def test_recover_partition_mode_last_row_delete(spark, tmp_path, monkeypatch):
     )
     merge_upsert(spark, t, ups, "k", partition_col="part")
     assert spark.read.parquet(t).count() == 1
+
+
+# One table per partition-value spelling that Spark's partition-type
+# inference reads back in another lexical form: '01' → 1, '1.10' → 1.1,
+# '1e5' → 100000, ' 1' → 1.0, and a one-digit-fraction timestamp.
+_DRIFT_CLASSES = {
+    "leading-zero": ["01", "02", "03"],
+    "trailing-zero": ["1.10", "2.10", "3.10"],
+    "exponent": ["1e5", "2e5", "3e5"],
+    "leading-space": [" 1", " 2", " 3"],
+    "timestamp-one-digit-fraction": [
+        "2024-01-01 00:00:00.5",
+        "2024-01-02 00:00:00.5",
+        "2024-01-03 00:00:00.5",
+    ],
+}
+
+
+def _drift_table_and_updates(spark, path, vals):
+    """Keys 0-5, two per partition. The updates upsert key 0 in place,
+    move key 2 from the second partition into the first, and delete
+    both keys of the third partition (a deletion-only partition)."""
+    spark.createDataFrame(
+        [(k, f"v{k}", vals[k // 2]) for k in range(6)], "k long, v string, p string"
+    ).write.partitionBy("p").parquet(path)
+    return spark.createDataFrame(
+        [
+            (0, "v0_new", vals[0], "upsert"),
+            (2, "v2_moved", vals[0], "upsert"),
+            (4, None, vals[2], "delete"),
+            (5, None, vals[2], "delete"),
+        ],
+        "k long, v string, p string, _op string",
+    )
+
+
+def _assert_drift_merge_applied(spark, path):
+    import pyarrow.parquet as pq
+
+    got = {r["k"]: r["v"] for r in spark.read.parquet(path).collect()}
+    assert got == {0: "v0_new", 1: "v1", 2: "v2_moved", 3: "v3"}
+    # every key lives in exactly one directory: no deleted key and no
+    # moved key's old copy survives anywhere on disk
+    where: dict[int, list[str]] = {}
+    for d in os.listdir(path):
+        if "=" in d:
+            for k in pq.read_table(os.path.join(path, d)).column("k").to_pylist():
+                where.setdefault(k, []).append(d)
+    assert sorted(where) == [0, 1, 2, 3]
+    assert all(len(dirs) == 1 for dirs in where.values()), where
+    assert where[2] == where[0]  # the moved key sits in its new partition
+    parent = os.path.dirname(path)
+    assert not [d for d in os.listdir(parent) if "__staged" in d or "__old" in d]
+
+
+@pytest.mark.parametrize(
+    "vals", list(_DRIFT_CLASSES.values()), ids=list(_DRIFT_CLASSES)
+)
+def test_merge_swaps_inference_drifting_partition_values(spark, tmp_path, vals):
+    """Directory names whose value reads back in another form ('p=01'
+    reads back as 1) merge like any other: the swap replaces the
+    directories it observed, not names predicted from read-back values."""
+    path = str(tmp_path / "t")
+    updates = _drift_table_and_updates(spark, path, vals)
+    stats = merge_upsert(spark, path, updates, "k", partition_col="p")
+    assert stats == {"upserted": 2, "deleted": 2, "partitions_rewritten": 3}
+    _assert_drift_merge_applied(spark, path)
+
+
+def test_recover_mid_swap_on_drifting_partitions(spark, tmp_path, monkeypatch):
+    """A crash after the first directory of the swap leaves a table
+    missing a partition; recover_merge replays the intent's observed
+    directory names to the same table an uninterrupted merge gives."""
+    import spectraplex_spark.sources.merge as M
+    from spectraplex_spark.sources.merge import recover_merge
+
+    path = str(tmp_path / "t")
+    updates = _drift_table_and_updates(spark, path, _DRIFT_CLASSES["leading-zero"])
+    real_rmtree = M.shutil.rmtree
+    swaps = []
+
+    def crash_on_second_swap(p, *a, **kw):
+        if p.startswith(path + "/"):
+            swaps.append(p)
+            if len(swaps) == 2:
+                raise OSError("simulated crash mid-swap")
+        return real_rmtree(p, *a, **kw)
+
+    monkeypatch.setattr(M.shutil, "rmtree", crash_on_second_swap)
+    with pytest.raises(OSError, match="simulated crash"):
+        merge_upsert(spark, path, updates, "k", partition_col="p")
+    monkeypatch.setattr(M.shutil, "rmtree", real_rmtree)
+    # torn: the first observed directory is gone, the rewrite not moved in
+    assert not os.path.exists(os.path.join(path, "p=01"))
+    assert not os.path.exists(os.path.join(path, "p=1"))
+
+    assert recover_merge(path) == "completed-merge"
+    _assert_drift_merge_applied(spark, path)

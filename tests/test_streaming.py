@@ -84,6 +84,34 @@ def test_stream_replay_is_idempotent(spark, tmp_path):
     assert silver.count() == silver.select("id").distinct().count() == 6
 
 
+def test_stream_appends_to_batch_landed_silver(spark, tmp_path):
+    """Streamed silver lands in the batch layout: a stream into a silver
+    table that write_silver created appends to it, and every entry is
+    read back exactly once."""
+    import os
+
+    from spectraplex_spark.schemas import BRONZE_SCHEMA
+    from spectraplex_spark.sources.io import write_silver
+
+    landing, rows = _land_bronze(tmp_path)
+    silver_path = str(tmp_path / "silver")
+    audit = F.lit("2024-01-01 00:00:00").cast("timestamp")
+    first = normalize(spark.createDataFrame(rows[:2], BRONZE_SCHEMA), audit_ts=audit)
+    assert write_silver(first, silver_path) > 0
+    os.remove(os.path.join(landing, "part-0.jsonl"))  # stream only the rest
+
+    q = stream_normalize_to_silver(
+        read_bronze_stream(spark, landing), silver_path, str(tmp_path / "ckpt"),
+        audit_ts=audit,
+    ).start()
+    q.awaitTermination(120)
+
+    want = normalize(spark.createDataFrame(rows, BRONZE_SCHEMA), audit_ts=audit)
+    got = sorted(r.id for r in spark.read.parquet(silver_path).collect())
+    assert got == sorted(r.id for r in want.collect())
+    assert os.path.isdir(os.path.join(silver_path, "entry_date=2024-01-01"))
+
+
 def _kafka_wire_rows(rows):
     """Bronze rows → the Kafka source's fixed wire schema."""
     wire = []

@@ -270,7 +270,7 @@ def test_yellowstone_stream_to_silver_end_to_end(spark, tmp_path):
     q.awaitTermination(120)
     rows = duckdb.sql(
         f"SELECT wallet_address, asset_symbol, CAST(amount AS DOUBLE) AS a "
-        f"FROM '{silver_path}/*.parquet'"
+        f"FROM '{silver_path}/*/*.parquet'"
     ).fetchall()
     assert rows == [(WALLET_B58, "SOL", -0.5)]
 
