@@ -71,6 +71,8 @@ def cmd_ingest(args) -> int:
 
 
 def cmd_normalize(args) -> int:
+    from pyspark.sql import Observation, functions as F
+
     from spectraplex_spark.operators.normalize import normalize, parse_failures
     from spectraplex_spark.sources.io import read_bronze_jsonl, write_jsonl, write_silver
 
@@ -80,18 +82,18 @@ def cmd_normalize(args) -> int:
         bronze = read_bronze_jsonl(spark, args.input)
     else:
         bronze = spark.read.parquet(args.input)
-    # persist: the silver write (anti-join + count + write) and the
-    # parse_failures count each re-run the bronze lineage — without
-    # this the expensive JSON parse executes up to four times per
-    # invocation (the same pattern land_with_quarantine documents;
-    # r14 review finding).
+    # persist: the parse_failures count and the silver write each read
+    # bronze, and without the cache the expensive JSON parse would run
+    # once for each. The silver write counts its rows through an
+    # observation on the write itself, so normalize runs once.
     bronze = bronze.persist()
     try:
         silver = normalize(bronze)
         n_bad = parse_failures(bronze).count()
         if args.jsonl:
-            write_jsonl(silver, args.output)
-            n = silver.count()
+            seen = Observation()
+            write_jsonl(silver.observe(seen, F.count(F.lit(1)).alias("n")), args.output)
+            n = seen.get["n"]
         else:
             n = write_silver(silver, args.output)
     finally:

@@ -14,19 +14,23 @@ Reference mapping:
     wallet predicate is pushed to the parquet reader but clusters
     nothing: a wallet's rows are spread over every file.
 
-Scale notes: the anti-join reads ONLY the id column of the target
-(Parquet column pruning), so its cost is O(ids), not O(data) — but it
-reads every id the table holds, so a landing's cost grows with history.
-On Delta/Iceberg this whole protocol becomes a MERGE; plain Parquet has
-no transactional upsert, so append + anti-join is the portable expression.
+Scale notes: each append is one Spark query — the input is read once,
+deduplicated, anti-joined and written, and the row count is observed on
+the way into the writer, so no sink caches its input or runs a separate
+count. The anti-join reads ONLY the id column of the target (Parquet
+column pruning), so its cost is O(ids), not O(data) — but it reads every
+id the table holds, so a landing's cost grows with history. On
+Delta/Iceberg this whole protocol becomes a MERGE; plain Parquet has no
+transactional upsert, so append + anti-join is the portable expression.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, types as T
 
 from spectraplex_spark.schemas import BRONZE_SCHEMA, SILVER_SCHEMA
 from spectraplex_spark.sources.commit import (
@@ -260,6 +264,14 @@ def idempotent_append(
 
     Returns the number of rows appended.
 
+    ``df`` is evaluated once: the rows are counted by an observation on
+    the write itself, with no cache and no separate count job. A caller
+    whose ``df`` has an expensive or nondeterministic lineage and that
+    evaluates it again elsewhere persists it first. An append that
+    admits no rows commits no epoch and leaves the target as it found
+    it: the schema-only part file Spark writes for an empty flat write
+    is removed, and so is a directory the append itself created.
+
     Within-batch duplicates are also collapsed (first occurrence wins
     arbitrarily among identical ids — the reference's ON CONFLICT keeps
     the first INSERT too, repo.rs:26).
@@ -331,20 +343,32 @@ def idempotent_append(
             F.col(id_col).eqNullSafe(F.col("_existing_id")),
             "left_anti",
         )
-    # persist: the filtered batch feeds both the count and the write —
-    # without it the scan + anti-join would execute twice
-    batch = batch.persist()
-    try:
-        n = batch.count()
-        if n:
-            writer = batch.write.mode("append")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.parquet(path)
-            commit_append_epoch(path)
-    finally:
-        batch.unpersist()
+    # The write is the only query over the batch; the observation counts
+    # the rows on their way into the writer, so nothing is cached and
+    # nothing is evaluated twice.
+    seen = Observation()
+    writer = batch.observe(seen, F.count(F.lit(1)).alias("n")).write.mode("append")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    existed = os.path.isdir(path)
+    before = _all_files(path)
+    writer.parquet(path)
+    n = seen.get["n"]
+    if n:
+        commit_append_epoch(path)
+    elif not existed:
+        shutil.rmtree(path)
+    else:
+        # An empty write still leaves a schema-only part file on a flat
+        # table, with its checksum; take back every file it added.
+        for f in _all_files(path) - before:
+            os.remove(f)
     return n
+
+
+def _all_files(path: str) -> set[str]:
+    """Every file under ``path``: data, checksums, markers, manifests."""
+    return {os.path.join(root, f) for root, _, files in os.walk(path) for f in files}
 
 
 def write_bronze(df: DataFrame, path: str) -> int:
@@ -371,6 +395,11 @@ def land_with_quarantine(
     payload, a reason, and when it was quarantined) instead of being
     silently dropped. Returns (n_silver_appended, n_quarantined).
 
+    Each lane evaluates ``bronze`` once, in the job that writes it, so
+    a landing reads its input twice and caches nothing. The caller owns
+    any caching: persist ``bronze`` first if its lineage is expensive
+    or nondeterministic (a source that may change between reads).
+
     Both lanes use the same idempotent-append protocol, so replays are
     no-ops on both; quarantined rows stay replayable — fix the parser,
     re-ingest the quarantine as bronze, and the anti-join admits only
@@ -388,39 +417,29 @@ def land_with_quarantine(
     """
     from spectraplex_spark.operators.normalize import normalize, parse_failures
 
-    # persist: both lanes (normalize + parse_failures), each with a
-    # count and a write inside idempotent_append, otherwise re-run the
-    # bronze lineage — the JSON parse normalize's docstring calls THE
-    # cost — about four times per landing (review finding)
-    bronze = bronze.persist()
-    try:
-        silver = normalize(bronze, audit_ts=audit_ts)
-        if prices is not None:
-            from spectraplex_spark.operators.temporal import enrich_fiat_value
+    silver = normalize(bronze, audit_ts=audit_ts)
+    if prices is not None:
+        from spectraplex_spark.operators.temporal import enrich_fiat_value
 
-            silver = enrich_fiat_value(silver, prices)
-        n_silver = write_silver(silver, silver_path)
-        bad = parse_failures(bronze).select(
-            "id",
-            "tx_hash",
-            "chain",
-            "raw_metadata",
-            # all-null corrupt-line rows (PERMISSIVE read) carry no
-            # payload at all; label them distinctly. They collapse to
-            # one null-id representative in the idempotent sink — they
-            # are indistinguishable by construction.
-            F.when(
-                F.col("raw_metadata").isNull(), "corrupt bronze line"
-            )
-            .otherwise("unparseable raw_metadata")
-            .alias("reason"),
-            (audit_ts if audit_ts is not None else F.current_timestamp()).alias(
-                "quarantined_at"
-            ),
-        )
-        n_bad = idempotent_append(bad, quarantine_path, id_col="id")
-    finally:
-        bronze.unpersist()
+        silver = enrich_fiat_value(silver, prices)
+    n_silver = write_silver(silver, silver_path)
+    bad = parse_failures(bronze).select(
+        "id",
+        "tx_hash",
+        "chain",
+        "raw_metadata",
+        # all-null corrupt-line rows (PERMISSIVE read) carry no payload
+        # at all; label them distinctly. They collapse to one null-id
+        # representative in the idempotent sink — they are
+        # indistinguishable by construction.
+        F.when(F.col("raw_metadata").isNull(), "corrupt bronze line")
+        .otherwise("unparseable raw_metadata")
+        .alias("reason"),
+        (audit_ts if audit_ts is not None else F.current_timestamp()).alias(
+            "quarantined_at"
+        ),
+    )
+    n_bad = idempotent_append(bad, quarantine_path, id_col="id")
     return n_silver, n_bad
 
 

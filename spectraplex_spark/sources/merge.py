@@ -38,7 +38,9 @@ scoped directory with no staged twin is a pure deletion and is
 removed. Values whose directory text reads back in another form
 (``p=01`` reads back as int 1) are therefore no special case: the
 rewrite carries the partition column as the target reads it back, so
-``p=01`` is rewritten as ``p=1`` and the old ``p=01`` goes.
+``p=01`` is rewritten as ``p=1`` and the old ``p=01`` goes. An update
+whose partition value that type cannot hold (``p=abc`` into an int
+table) widens the rewrite's partition column to string instead.
 """
 
 from __future__ import annotations
@@ -209,13 +211,21 @@ def _merge_upsert_impl(
         # Partition values enter the rewrite typed as the target reads
         # them back (partition-type inference: 'p=01' reads back as int 1,
         # 'p=1e5' as decimal 100000), so scope rows and upserts spell each
-        # partition one way and the staged write is deterministic. A
+        # partition one way and the staged write is deterministic. When
+        # an update's value does not fit that type ('abc' into an int
+        # table, '3e6' into decimal(6,0)), both sides widen to string,
+        # which holds every value a directory name can spell; a value
+        # that fits keeps its read-back spelling ('1e5' → '100000'). A
         # NULL-only table reads back NullType, which no value casts to;
         # the union widens it instead.
         part = F.col(partition_col)
         read_back = target.schema[partition_col].dataType
         if not isinstance(read_back, T.NullType):
-            part = part.cast(read_back)
+            fitted = part.try_cast(read_back)
+            if updates.filter(part.isNotNull() & fitted.isNull()).isEmpty():
+                part = part.cast(read_back)
+            else:
+                part = F.coalesce(fitted.cast("string"), part.cast("string"))
         upserts = upserts.withColumn(partition_col, part)
         parts = updates.select(part.alias("_p")).distinct()
         if probe_moved_keys:
@@ -226,7 +236,7 @@ def _merge_upsert_impl(
                 target.join(
                     F.broadcast(updates.select(key_col)), key_col, "left_semi"
                 )
-                .select(F.col(partition_col).alias("_p"))
+                .select(part.alias("_p"))
                 .distinct()
             )
             parts = parts.unionByName(current).distinct()
@@ -237,9 +247,9 @@ def _merge_upsert_impl(
         # needs an explicit isNull branch or its rows silently escape
         # the rewrite scope.
         non_null = [v for v in affected if v is not None]
-        pred = F.col(partition_col).isin(non_null)
+        pred = part.isin(non_null)
         if len(non_null) < len(affected):
-            pred = pred | F.col(partition_col).isNull()
+            pred = pred | part.isNull()
         scoped_target = target.filter(pred)
         # The directories that hold the scoped rows, read from the file
         # paths rather than predicted from values: a file path is the
@@ -254,6 +264,7 @@ def _merge_upsert_impl(
             .collect()
         }
         n_parts = len(affected)
+        scoped_target = scoped_target.withColumn(partition_col, part)
     else:
         scoped_target = target
         n_parts = 1

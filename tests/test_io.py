@@ -286,3 +286,88 @@ def test_idempotent_append_rejects_partition_layout_drift(spark, tmp_path):
     # matching layouts still replay as no-ops
     assert idempotent_append(df, part, partition_by=("day",)) == 0
     assert idempotent_append(df, flat) == 0
+
+
+# The append counts its rows through an observation on its write, and
+# ``Observation.get`` blocks until the metrics arrive: each call below
+# runs under a deadline so a lost observation fails instead of hanging.
+APPEND_DEADLINE_S = 120
+
+
+def _append_within_deadline(*args, **kwargs) -> int:
+    import threading
+
+    from spectraplex_spark.sources.io import idempotent_append
+
+    out: dict = {}
+
+    def run():
+        try:
+            out["n"] = idempotent_append(*args, **kwargs)
+        except BaseException as e:  # re-raised in the test's thread
+            out["error"] = e
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(APPEND_DEADLINE_S)
+    assert not t.is_alive(), f"idempotent_append still running after {APPEND_DEADLINE_S}s"
+    if "error" in out:
+        raise out["error"]
+    return out["n"]
+
+
+def _table_state(path: str) -> dict[str, bytes]:
+    """Every file under ``path`` (data, checksums, markers and epoch
+    manifests) with its content."""
+    import os
+
+    state = {}
+    for root, _, files in os.walk(path):
+        for f in files:
+            p = os.path.join(root, f)
+            with open(p, "rb") as fh:
+                state[os.path.relpath(p, path)] = fh.read()
+    return state
+
+
+def test_replay_leaves_flat_and_partitioned_targets_unchanged(spark, tmp_path):
+    """A replay admits no rows, so it commits no epoch and adds no file:
+    not even the schema-only part file Spark writes for an empty flat
+    write."""
+    import os
+
+    batch = _bronze_rows(spark, range(6))
+    for name, partition_by in (("flat", ()), ("partitioned", ("chain",))):
+        path = str(tmp_path / name)
+        assert _append_within_deadline(batch, path, partition_by=partition_by) == 6
+        before = _table_state(path)
+        assert any(f.startswith("_spectraplex_epochs") for f in before)
+        assert _append_within_deadline(batch, path, partition_by=partition_by) == 0
+        assert _table_state(path) == before
+        assert len(os.listdir(os.path.join(path, "_spectraplex_epochs"))) == 1
+
+
+def test_zero_row_first_append_leaves_no_directory(spark, tmp_path):
+    """A first append that admits nothing creates no table; into an
+    existing directory that holds no table yet it adds nothing."""
+    import os
+
+    empty = spark.createDataFrame([], BRONZE_SCHEMA)
+    for partition_by in ((), ("chain",)):
+        path = str(tmp_path / f"new-{len(partition_by)}")
+        assert _append_within_deadline(empty, path, partition_by=partition_by) == 0
+        assert not os.path.exists(path)
+    bare = tmp_path / "bare"
+    bare.mkdir()
+    assert _append_within_deadline(empty, str(bare)) == 0
+    assert os.listdir(bare) == []
+
+
+def test_empty_and_all_duplicate_batches_return_zero(spark, tmp_path):
+    """An input frame with no rows (and no partitions) and a batch whose
+    every row duplicates a landed id both count 0 through the write."""
+    path = str(tmp_path / "t")
+    assert _append_within_deadline(_bronze_rows(spark, [1, 2]), path) == 2
+    assert _append_within_deadline(spark.createDataFrame([], BRONZE_SCHEMA), path) == 0
+    assert _append_within_deadline(_bronze_rows(spark, [1, 1, 2, 2]), path) == 0
+    assert spark.read.parquet(path).count() == 2

@@ -386,23 +386,29 @@ def _drift_table_and_updates(spark, path, vals):
     )
 
 
-def _assert_drift_merge_applied(spark, path):
+def _assert_one_copy_of_each_key(path, keys):
+    """Every key lives in exactly one directory: no deleted key and no
+    moved key's old copy survives anywhere on disk, and no staged or old
+    copy of the table is left. Returns key -> [directory]."""
     import pyarrow.parquet as pq
 
-    got = {r["k"]: r["v"] for r in spark.read.parquet(path).collect()}
-    assert got == {0: "v0_new", 1: "v1", 2: "v2_moved", 3: "v3"}
-    # every key lives in exactly one directory: no deleted key and no
-    # moved key's old copy survives anywhere on disk
     where: dict[int, list[str]] = {}
     for d in os.listdir(path):
         if "=" in d:
             for k in pq.read_table(os.path.join(path, d)).column("k").to_pylist():
                 where.setdefault(k, []).append(d)
-    assert sorted(where) == [0, 1, 2, 3]
+    assert sorted(where) == keys
     assert all(len(dirs) == 1 for dirs in where.values()), where
-    assert where[2] == where[0]  # the moved key sits in its new partition
     parent = os.path.dirname(path)
     assert not [d for d in os.listdir(parent) if "__staged" in d or "__old" in d]
+    return where
+
+
+def _assert_drift_merge_applied(spark, path):
+    got = {r["k"]: r["v"] for r in spark.read.parquet(path).collect()}
+    assert got == {0: "v0_new", 1: "v1", 2: "v2_moved", 3: "v3"}
+    where = _assert_one_copy_of_each_key(path, [0, 1, 2, 3])
+    assert where[2] == where[0]  # the moved key sits in its new partition
 
 
 @pytest.mark.parametrize(
@@ -417,6 +423,48 @@ def test_merge_swaps_inference_drifting_partition_values(spark, tmp_path, vals):
     stats = merge_upsert(spark, path, updates, "k", partition_col="p")
     assert stats == {"upserted": 2, "deleted": 2, "partitions_rewritten": 3}
     _assert_drift_merge_applied(spark, path)
+
+
+@pytest.mark.parametrize(
+    "vals",
+    [["1", "2", "abc"], ["1e5", "2e5", "3e6"]],
+    ids=["string-into-int", "overflows-read-back-decimal"],
+)
+def test_merge_widens_partition_type_the_values_outgrow(spark, tmp_path, vals):
+    """An upsert whose partition value the read-back type cannot hold
+    ('abc' into a p=1/p=2 table read back as int, '3e6' into p=1e5/p=2e5
+    read back as decimal(6,0)) merges: both sides of the rewrite widen
+    to a type that holds every value."""
+    from decimal import Decimal, InvalidOperation
+
+    path = str(tmp_path / "t")
+    spark.createDataFrame(
+        [(k, f"v{k}", vals[k // 2]) for k in range(4)], "k long, v string, p string"
+    ).write.partitionBy("p").parquet(path)
+    updates = spark.createDataFrame(
+        [
+            (0, "v0_new", vals[0], "upsert"),
+            (2, "v2_moved", vals[2], "upsert"),
+            (9, "v9", vals[2], "upsert"),
+        ],
+        "k long, v string, p string, _op string",
+    )
+    stats = merge_upsert(spark, path, updates, "k", partition_col="p")
+    assert stats == {"upserted": 3, "deleted": 0, "partitions_rewritten": 3}
+
+    def read_value(p):
+        try:
+            return Decimal(str(p))
+        except InvalidOperation:
+            return str(p)
+
+    got = {r["k"]: (r["v"], read_value(r["p"])) for r in spark.read.parquet(path).collect()}
+    a, b, c = (read_value(v) for v in vals)
+    assert got == {
+        0: ("v0_new", a), 1: ("v1", a), 2: ("v2_moved", c), 3: ("v3", b), 9: ("v9", c)
+    }
+    where = _assert_one_copy_of_each_key(path, [0, 1, 2, 3, 9])
+    assert where[2] == where[9]  # the moved key sits in its new partition
 
 
 def test_recover_mid_swap_on_drifting_partitions(spark, tmp_path, monkeypatch):

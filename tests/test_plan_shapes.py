@@ -331,3 +331,52 @@ def test_char_entropy_normalizes_once_per_row(spark):
     assert plan.count("regexp_replace") == 1, plan.count("regexp_replace")
     # the guard itself must still exist (phantom 1-char rows otherwise)
     assert "RLIKE" in plan or "rlike" in plan
+
+
+def test_fresh_append_is_one_uncached_write_job(spark, tmp_path):
+    """idempotent_append reads its input once: one SQL execution, the
+    write, runs every job of a fresh append (AQE submits its shuffle map
+    stage as a job of the same execution); no job is a count, and the
+    plan caches nothing."""
+    import uuid
+
+    from spectraplex_spark.schemas import BRONZE_SCHEMA
+    from spectraplex_spark.sources.io import idempotent_append
+
+    rows = [
+        (f"i{k}", "u", f"w{k % 3}", 1672531200 + k, f"s{k}", "solana", "{}", None)
+        for k in range(20)
+    ]
+    batch = spark.createDataFrame(rows, BRONZE_SCHEMA)
+    sc = spark.sparkContext
+    group = f"fresh-append-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "fresh append")
+    try:
+        assert idempotent_append(batch, str(tmp_path / "t")) == 20
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = set(tracker.getJobIdsForGroup(group))
+    assert jobs
+    stages = [
+        tracker.getStageInfo(s).name
+        for j in jobs
+        for s in tracker.getJobInfo(j).stageIds
+        if tracker.getStageInfo(s) is not None
+    ]
+    assert not [name for name in stages if name.startswith("count at")], stages
+    listed = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = []
+    for i in range(listed.size()):
+        e = listed.apply(i)
+        keys, ran = e.jobs().keysIterator(), set()
+        while keys.hasNext():
+            ran.add(int(keys.next()))
+        if ran & jobs:
+            assert ran <= jobs
+            plans.append(e.physicalPlanDescription())
+    assert len(plans) == 1
+    assert "InsertIntoHadoopFsRelationCommand" in plans[0]
+    assert "InMemoryRelation" not in plans[0]
+    assert "InMemoryTableScan" not in plans[0]

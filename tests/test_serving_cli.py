@@ -105,6 +105,11 @@ def test_cli_end_to_end(spark, tmp_path, capsys):
 
     assert main(["normalize", "--input", bp, "--output", sp]) == 0
     assert "3 ledger entries" in capsys.readouterr().out
+    # --jsonl counts the entries through its write
+    jp = str(tmp_path / "silver_jsonl")
+    assert main(["normalize", "--input", bp, "--output", jp, "--jsonl"]) == 0
+    assert "3 ledger entries" in capsys.readouterr().out
+    assert spark.read.json(jp).count() == 3
 
     assert main(["read", "--silver", sp, "--wallet", WALLET, "--limit", "10"]) == 0
     lines = [json.loads(x) for x in capsys.readouterr().out.strip().splitlines()]
