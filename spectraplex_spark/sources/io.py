@@ -34,8 +34,11 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, ty
 
 from spectraplex_spark.schemas import BRONZE_SCHEMA, SILVER_SCHEMA
 from spectraplex_spark.sources.commit import (
+    EPOCH_DIR,
+    _data_files,
     _epoch_paths,
     commit_append_epoch,
+    committed_epoch_files,
     read_committed_epochs,
 )
 
@@ -270,7 +273,9 @@ def idempotent_append(
     evaluates it again elsewhere persists it first. An append that
     admits no rows commits no epoch and leaves the target as it found
     it: the schema-only part file Spark writes for an empty flat write
-    is removed, and so is a directory the append itself created.
+    is removed, and so is a directory the append itself created if it
+    still holds no data. Nothing another writer landed meanwhile (its
+    part files, its epoch manifest) is touched.
 
     Within-batch duplicates are also collapsed (first occurrence wins
     arbitrarily among identical ids — the reference's ON CONFLICT keeps
@@ -351,24 +356,54 @@ def idempotent_append(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     existed = os.path.isdir(path)
-    before = _all_files(path)
+    before = set(_data_files(path))
+    marked = os.path.exists(os.path.join(path, "_SUCCESS"))
     writer.parquet(path)
     n = seen.get["n"]
     if n:
         commit_append_epoch(path)
-    elif not existed:
-        shutil.rmtree(path)
     else:
-        # An empty write still leaves a schema-only part file on a flat
-        # table, with its checksum; take back every file it added.
-        for f in _all_files(path) - before:
-            os.remove(f)
+        _undo_empty_write(path, before, marked, created=not existed)
     return n
 
 
-def _all_files(path: str) -> set[str]:
-    """Every file under ``path``: data, checksums, markers, manifests."""
-    return {os.path.join(root, f) for root, _, files in os.walk(path) for f in files}
+def _undo_empty_write(
+    path: str, before: set[str], marked: bool, created: bool
+) -> None:
+    """Take back what an empty write left: the schema-only part file
+    Spark writes on a flat table, the job's ``_SUCCESS`` marker if the
+    table had none, their checksums, and the directory if this append
+    created it and it still holds no data. Only part files that hold no
+    rows and that no epoch lists are removed, and never an epoch
+    manifest, so a batch another writer landed meanwhile survives, even
+    one whose epoch adopted the empty file."""
+    import pyarrow.parquet as pq
+
+    def empty_part(rel: str) -> bool:
+        name = os.path.basename(rel)
+        if not (name.startswith("part-") and name.endswith(".parquet")):
+            return False
+        try:
+            return pq.ParquetFile(os.path.join(path, rel)).metadata.num_rows == 0
+        except FileNotFoundError:
+            return False
+
+    added = set(_data_files(path)) - before - set(committed_epoch_files(path))
+    undo = [os.path.join(path, rel) for rel in added if empty_part(rel)]
+    if not marked:
+        undo.append(os.path.join(path, "_SUCCESS"))
+    for f in undo:
+        crc = os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")
+        for g in (f, crc):
+            if os.path.exists(g):
+                os.remove(g)
+    if (
+        created
+        and os.path.isdir(path)
+        and not _data_files(path)
+        and not os.path.exists(os.path.join(path, EPOCH_DIR))
+    ):
+        shutil.rmtree(path)
 
 
 def write_bronze(df: DataFrame, path: str) -> int:

@@ -208,24 +208,27 @@ def _merge_upsert_impl(
     n_del = n_updates - n_up
 
     if partition_col is not None:
-        # Partition values enter the rewrite typed as the target reads
+        # Partition values enter the rewrite spelled as the target reads
         # them back (partition-type inference: 'p=01' reads back as int 1,
         # 'p=1e5' as decimal 100000), so scope rows and upserts spell each
-        # partition one way and the staged write is deterministic. When
-        # an update's value does not fit that type ('abc' into an int
-        # table, '3e6' into decimal(6,0)), both sides widen to string,
-        # which holds every value a directory name can spell; a value
-        # that fits keeps its read-back spelling ('1e5' → '100000'). A
+        # partition one way and the staged write is deterministic. The
+        # column goes in as a string: partition values live only in
+        # directory names, and a string cast of the read-back value
+        # spells the name a typed write would. A value the read-back type
+        # cannot hold without loss ('abc' or '1.5' into an int table,
+        # '3e6' into decimal(6,0)) keeps its own spelling instead. A
         # NULL-only table reads back NullType, which no value casts to;
         # the union widens it instead.
         part = F.col(partition_col)
         read_back = target.schema[partition_col].dataType
         if not isinstance(read_back, T.NullType):
             fitted = part.try_cast(read_back)
-            if updates.filter(part.isNotNull() & fitted.isNull()).isEmpty():
-                part = part.cast(read_back)
-            else:
-                part = F.coalesce(fitted.cast("string"), part.cast("string"))
+            if isinstance(read_back, T.NumericType):
+                exact = T.DecimalType(38, 18)
+                fitted = F.when(
+                    part.try_cast(exact) == fitted.try_cast(exact), fitted
+                )
+            part = F.coalesce(fitted.cast("string"), part.cast("string"))
         upserts = upserts.withColumn(partition_col, part)
         parts = updates.select(part.alias("_p")).distinct()
         if probe_moved_keys:

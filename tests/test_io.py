@@ -371,3 +371,34 @@ def test_empty_and_all_duplicate_batches_return_zero(spark, tmp_path):
     assert _append_within_deadline(spark.createDataFrame([], BRONZE_SCHEMA), path) == 0
     assert _append_within_deadline(_bronze_rows(spark, [1, 1, 2, 2]), path) == 0
     assert spark.read.parquet(path).count() == 2
+
+
+def test_zero_row_append_keeps_a_batch_landed_during_it(spark, tmp_path, monkeypatch):
+    """Another writer lands a batch and commits its epoch while a replay
+    writes its empty batch; the replay's clean-up removes only what its
+    own empty write produced, so the other batch stays committed. The
+    same holds when the empty append is the one that created the
+    directory."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from spectraplex_spark.sources.commit import read_committed_epochs, validate_epochs
+
+    write = DataFrameWriter.parquet
+    for name, seeded in (("existing", True), ("fresh", False)):
+        path = str(tmp_path / name)
+        if seeded:
+            assert _append_within_deadline(_bronze_rows(spark, range(4)), path) == 4
+
+        def write_then_land(self, p, *a, **kw):
+            write(self, p, *a, **kw)
+            monkeypatch.setattr(DataFrameWriter, "parquet", write)
+            assert idempotent_append(_bronze_rows(spark, range(4, 8)), path) == 4
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", write_then_land)
+        replay = _bronze_rows(spark, range(4)) if seeded else spark.createDataFrame(
+            [], BRONZE_SCHEMA
+        )
+        assert _append_within_deadline(replay, path) == 0
+        validate_epochs(path)
+        ids = sorted(r["id"] for r in read_committed_epochs(spark, path).collect())
+        assert ids == [f"id-{i}" for i in (range(8) if seeded else range(4, 8))]

@@ -427,14 +427,14 @@ def test_merge_swaps_inference_drifting_partition_values(spark, tmp_path, vals):
 
 @pytest.mark.parametrize(
     "vals",
-    [["1", "2", "abc"], ["1e5", "2e5", "3e6"]],
-    ids=["string-into-int", "overflows-read-back-decimal"],
+    [["1", "2", "abc"], ["1e5", "2e5", "3e6"], ["1e5", "2e5", "1.5"]],
+    ids=["string-into-int", "overflows-read-back-decimal", "rounds-in-read-back-decimal"],
 )
 def test_merge_widens_partition_type_the_values_outgrow(spark, tmp_path, vals):
     """An upsert whose partition value the read-back type cannot hold
-    ('abc' into a p=1/p=2 table read back as int, '3e6' into p=1e5/p=2e5
-    read back as decimal(6,0)) merges: both sides of the rewrite widen
-    to a type that holds every value."""
+    without loss ('abc' into a p=1/p=2 table read back as int, '3e6' or
+    '1.5' into p=1e5/p=2e5 read back as decimal(6,0)) merges: the value
+    keeps its own spelling, so '1.5' lands in p=1.5, not a rounded p=2."""
     from decimal import Decimal, InvalidOperation
 
     path = str(tmp_path / "t")
